@@ -1005,13 +1005,14 @@ def _q21_sql() -> str:
 
 @register("q21_scrub", _q21_sql())
 def q21(spark, sf_dir):
-    """PII/toxicity scrub (Python-re pandas UDF) with deterministic PII
-    injected per row — including an Arabic-Indic-digit SSN that only the
-    Unicode digit-fold pre-pass catches — so the cross-engine oracle
+    """PII/toxicity scrub (the pipeline's ``scrubbed`` column: delta pandas
+    UDF coalesced with its input) with deterministic PII injected per row
+    — including an Arabic-Indic-digit SSN that only the Unicode
+    digit-fold pre-pass catches — so the cross-engine oracle
     exercises every rule AND the fold on every document; byte-identical
     output is the north-rule criterion. The UDF folds internally; the
     oracle folds via DuckDB translate() with the shared FROM/TO tables."""
-    from soda_core_spark.functions.scrub import pii_count_udf, scrub_udf
+    from soda_core_spark.functions.scrub import pii_count_udf, scrubbed
 
     d = _t(spark, sf_dir, "documents")
     text2 = F.concat(
@@ -1024,7 +1025,7 @@ def q21(spark, sf_dir):
     )
     return d.select(
         "doc_id",
-        scrub_udf(text2).alias("text_scrubbed"),
+        scrubbed(text2).alias("text_scrubbed"),
         pii_count_udf(text2).alias("pii_hits"),
     )
 

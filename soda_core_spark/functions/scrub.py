@@ -20,7 +20,10 @@ import re
 import unicodedata
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -90,70 +93,34 @@ _FOLD_PAIRS = [
 DIGIT_FOLD_FROM = "".join(p[0] for p in _FOLD_PAIRS)
 DIGIT_FOLD_TO = "".join(p[1] for p in _FOLD_PAIRS)
 _DIGIT_TRANS = str.maketrans(DIGIT_FOLD_FROM, DIGIT_FOLD_TO)
-# none of the Nd chars are regex-class metacharacters ([ ] \ ^ -), so the
-# raw set embeds directly in a character class
-_FOLD_NEEDED = re.compile("[" + DIGIT_FOLD_FROM + "]")
 
 
-try:  # RE2 path for the DETECTION scans (see _contains_mask)
-    import pyarrow as _pa
-    import pyarrow.compute as _pc
-
-    _HAVE_PA = True
-except Exception:  # pragma: no cover - pyarrow ships with pyspark
-    _HAVE_PA = False
-
-
-def _contains_mask(texts: pd.Series, re2_pattern: str, fallback) -> "pd.Series":
-    """Boolean contains-mask via pyarrow/RE2 with a Python-``re``
-    fallback. DETECTION ONLY — the replacement passes stay Python
-    ``re`` (the byte-parity contract engine). Safe because every
-    pattern routed here is a plain character class or an
-    ASCII-word-boundary alternation, on which RE2 and ``re.ASCII``
-    agree exactly (``\\b`` is [A-Za-z0-9_]-delimited in both;
-    character classes are set membership); equality is additionally
-    pinned row-for-row by tests/test_scrub_masks.py on adversarial
+def _contains_mask(texts: pd.Series, re2_pattern: str) -> pd.Series:
+    """Boolean contains-mask via pyarrow/RE2. DETECTION ONLY — the
+    replacement passes stay Python ``re`` (the byte-parity contract
+    engine). Safe because every pattern routed here is a plain character
+    class or an ASCII-word-boundary alternation, on which RE2 and
+    ``re.ASCII`` agree exactly (``\\b`` is [A-Za-z0-9_]-delimited in both;
+    character classes are set membership); equality with the Python-``re``
+    form is pinned row-for-row by tests/test_scrub_masks.py on adversarial
     unicode/boundary cases. Why: profiled on the r6 bench corpus, the
     two detection scans (650-char digit class + candidate mask) were
     73 % of the scrub batch — Python ``re`` scans ~55 ns/char where
     RE2's DFA measured 13-16× faster (0.67 s → 0.05 s per 20k docs).
-    NULL rows are False (matching the fallback's isinstance gate)."""
-    if _HAVE_PA:
-        try:
-            arr = _pa.Array.from_pandas(texts)
-            m = _pc.fill_null(
-                _pc.match_substring_regex(arr, re2_pattern), False
-            )
-            return pd.Series(
-                m.to_numpy(zero_copy_only=False), index=texts.index
-            )
-        except Exception:
-            pass
-    return fallback(texts)
-
-
-def _fold_needed_re(texts: pd.Series) -> pd.Series:
-    """Python-re fold detection (fallback): O(1) ``str.isascii`` gate,
-    650-char class scan only over the non-ASCII minority."""
-    arr = texts.to_numpy(dtype=object)
-    return pd.Series(
-        [
-            isinstance(s, str)
-            and not s.isascii()
-            and bool(_FOLD_NEEDED.search(s))
-            for s in arr
-        ],
-        index=texts.index,
-    )
+    NULL rows are False; the explicit string type keeps an all-NULL batch
+    from being inferred as Arrow's null type, which has no regex kernel."""
+    arr = pa.Array.from_pandas(texts, type=pa.string())
+    m = pc.fill_null(pc.match_substring_regex(arr, re2_pattern), False)
+    return pd.Series(m.to_numpy(zero_copy_only=False), index=texts.index)
 
 
 def _fold_digits(texts: pd.Series) -> pd.Series:
     """Fold Unicode digits to ASCII on the rows that need it (most rows
     contain none and keep their original string object — no copy).
-    Detection via :func:`_contains_mask` (RE2, re fallback)."""
-    mask = _contains_mask(
-        texts, "[" + DIGIT_FOLD_FROM + "]", _fold_needed_re
-    )
+    Detection via :func:`_contains_mask` (RE2); none of the Nd chars are
+    regex-class metacharacters ([ ] \\ ^ -), so the raw set embeds
+    directly in a character class."""
+    mask = _contains_mask(texts, "[" + DIGIT_FOLD_FROM + "]")
     if not mask.any():
         return texts
     out = texts.copy()
@@ -188,16 +155,10 @@ def scrub_text(text: str | None) -> str | None:
 #: cheap pre-filter: every scrub rule needs a digit or '@' (PII) or a
 #: toxicity word — rows matching neither CANNOT be changed by any rule and
 #: skip the 6-pass scrub entirely (most clean docs). Purely an
-#: optimization: replaced rows get the identical sequential scrub, so
+#: optimization: candidate rows get the identical sequential scrub, so
 #: byte-parity with the sequential oracle is preserved by construction.
-_CAN_MATCH = re.compile(
-    r"[0-9@]|(?i:\b(?:" + "|".join(re.escape(w) for w in TOXICITY_LEXICON) + r")\b)",
-    re.ASCII,
-)
-
-
-#: the same pattern in RE2 syntax (inline (?i:) group; \b and the
-#: classes are ASCII-identical across engines — see _contains_mask)
+#: RE2 syntax (inline (?i:) group; \b and the classes are ASCII-identical
+#: across engines — see _contains_mask).
 _CAN_MATCH_RE2 = (
     r"[0-9@]|(?i:\b(?:"
     + "|".join(re.escape(w) for w in TOXICITY_LEXICON)
@@ -205,64 +166,22 @@ _CAN_MATCH_RE2 = (
 )
 
 
-def _candidate_mask_re(texts: pd.Series) -> pd.Series:
-    # `== True` folds the NaN rows (null text) to False without the
-    # object-dtype fillna downcast warning
-    return texts.str.contains(_CAN_MATCH, regex=True) == True  # noqa: E712
-
-
 def _candidate_mask(texts: pd.Series) -> pd.Series:
-    return _contains_mask(texts, _CAN_MATCH_RE2, _candidate_mask_re)
-
-
-def can_match_col(text: "Column") -> "Column":
-    """JVM-side CONSERVATIVE SUPERSET of the Python prefilter: a row that
-    fails this cannot be changed by any scrub rule (every PII rule needs
-    a digit or '@'; toxicity needs one of the lexicon words — matched
-    here as substrings, a superset of the whole-word Python test, so
-    extra candidates just scrub to an unchanged string). Unicode digits
-    count too: the digit-fold pass can change any row containing one, so
-    the class embeds DIGIT_FOLD_FROM verbatim (Java regex handles
-    supplementary chars in classes per code point). Masking the UDF
-    input with ``F.when(can_match_col(t), t)`` ships NULL for the ~80 %
-    of rows with no candidate bytes — they never cross Arrow at all."""
-    from pyspark.sql import functions as F
-
-    tox = "|".join(re.escape(w) for w in TOXICITY_LEXICON)
-    return text.rlike("[0-9@" + DIGIT_FOLD_FROM + "]") | F.lower(text).rlike(tox)
-
-
-def scrub_batch(texts: pd.Series) -> pd.Series:
-    """Vectorized scrub over an Arrow batch: detector prefilter, then one
-    pandas ``str.replace`` (Python re) per rule over the candidate rows
-    only. Rule ORDER is semantic (sequential passes) — do not merge the
-    patterns into one alternation; leftmost-match-wins across rules would
-    diverge from sequential semantics on adjacent matches.
-
-    Digit fold runs first; a folded row always contains an ASCII digit
-    afterwards, so it is a candidate by construction and the folded form
-    reaches the output even when no rule fires."""
-    texts = _fold_digits(texts)
-    candidates = _candidate_mask(texts)
-    if not candidates.any():
-        return texts
-    out = texts.copy()
-    sub = texts[candidates]
-    for _, rx, repl in _COMPILED:
-        sub = sub.str.replace(rx, repl, regex=True)
-    out[candidates] = sub
-    return out
+    return _contains_mask(texts, _CAN_MATCH_RE2)
 
 
 def scrub_delta_batch(texts: pd.Series) -> pd.Series:
-    """Like :func:`scrub_batch` but returns NULL for every row the scrub
-    leaves byte-identical — the Arrow return batch then carries only the
-    CHANGED rows' bytes (a few % of corpus text) instead of echoing the
-    whole column back to the JVM. Reconstruct the full column with
-    ``F.coalesce(scrub_delta_udf(text), text)`` — byte-identical to
-    scrubbing every row, at a fraction of the Python→JVM traffic. This is
-    the memory-bandwidth-bound-pipeline optimization: same regex work,
-    ~10× fewer bytes crossing Arrow on the way out.
+    """Vectorized scrub over an Arrow batch that returns NULL for every
+    row the scrub leaves byte-identical — the Arrow return batch then
+    carries only the CHANGED rows' bytes (a few % of corpus text) instead
+    of echoing the whole column back to the JVM; :func:`scrubbed`
+    reconstructs the full column byte-identically to scrubbing every row.
+
+    Digit fold runs first, then the detector prefilter, then one pandas
+    ``str.replace`` (Python re) per rule over the candidate rows only.
+    Rule ORDER is semantic (sequential passes) — do not merge the
+    patterns into one alternation; leftmost-match-wins across rules would
+    diverge from sequential semantics on adjacent matches.
 
     "Changed" compares against the PRE-fold original, so a row whose only
     change is digit folding is still returned (its folded bytes are the
@@ -282,19 +201,17 @@ def scrub_delta_batch(texts: pd.Series) -> pd.Series:
 
 
 @pandas_udf(T.StringType())
-def scrub_udf(texts: pd.Series) -> pd.Series:
+def scrub_delta_udf(texts: pd.Series) -> pd.Series:
     # scalar form so it fuses into the same ArrowEvalPython node as the
     # other scorers (patterns are module-level, warm per worker regardless)
-    return scrub_batch(texts)
-
-
-@pandas_udf(T.StringType())
-def scrub_delta_udf(texts: pd.Series) -> pd.Series:
     return scrub_delta_batch(texts)
 
 
 def scrubbed(text: Column) -> Column:
-    return scrub_udf(text)
+    """The scrubbed text column: the delta UDF's changed rows, the input
+    elsewhere. The coalesce runs JVM-side, so only changed rows' bytes
+    come back across Arrow."""
+    return F.coalesce(scrub_delta_udf(text), text)
 
 
 def pii_hit_count(texts: pd.Series) -> pd.Series:

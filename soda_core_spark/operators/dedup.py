@@ -248,23 +248,6 @@ def _salted_hash(i: int):
     return lambda s: F.xxhash64(F.lit(i), s)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as a single column expression: for hash i, min
-    over xxhash64(i, shingle). NOTE: higher-order functions run
-    interpreted with no common-subexpression elimination, so referencing
-    this column multiple times re-evaluates the whole shingle pipeline —
-    for the hot path use the explode→groupBy aggregation form inside
-    :func:`minhash_near_duplicates` (same values, each shingle hashed
-    once). This expression form remains for single-reference use
-    (e.g. attaching a signature column during a write)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _salted_hash(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
     """Array of ``bands`` band keys; docs sharing ANY band key are
     candidates. Key = hash of (band index, the band's signature slice)."""
@@ -701,73 +684,6 @@ def simhash64(text: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _dup_class_frame(base: DataFrame) -> DataFrame:
-    """Collapse an (id, shl) shingle frame to EXACT-DUPLICATE classes:
-    one row per distinct shingle ARRAY, with the sorted member-id list.
-
-    ``(cid, shl, ids, __f)`` where ``cid`` is the smallest member id.
-
-    Why: pairwise-similarity joins cost Σ f² join rows per shingle;
-    byte-identical documents (the dominant duplication mode in web
-    corpora — mirrors, re-crawls, boilerplate pages) all carry the SAME
-    shingle array, so every pairwise quantity (n_shared, jaccard, band
-    keys) is a function of the CLASS pair, not the doc pair. Grouping
-    first runs the quadratic stage at class grain and expands to doc
-    pairs only AFTER the similarity threshold — on a corpus where each
-    doc has r replicas this divides candidate volume by r², while the
-    expansion step emits exactly the rows the doc-grain join would
-    have. Equality is on the raw array (equal text ⇒ equal array);
-    permuted-equal shingle SETS simply stay in separate classes and
-    meet in the cross-class join — still exact, just unmerged.
-
-    The groupBy shuffles each document's shingle array once — the same
-    bytes the exploded inverted-index shuffle moves, so the extra
-    stage does not increase shuffle volume order."""
-    return (
-        base.groupBy("shl")
-        .agg(
-            F.array_sort(F.collect_list("id")).alias("ids"),
-            F.count(F.lit(1)).cast("long").alias("__f"),
-        )
-        .select(
-            F.element_at("ids", 1).alias("cid"), "shl", "ids", "__f"
-        )
-    )
-
-
-def _cross_class_pairs(ids_a: Column, ids_b: Column) -> Column:
-    """All (id_a, id_b) doc pairs between two DISTINCT classes, ordered
-    id_a < id_b per pair (ids never overlap across classes)."""
-    return F.flatten(
-        F.transform(
-            ids_a,
-            lambda x: F.transform(
-                ids_b,
-                lambda y: F.struct(
-                    F.least(x, y).alias("id_a"),
-                    F.greatest(x, y).alias("id_b"),
-                ),
-            ),
-        )
-    )
-
-
-def _intra_class_pairs(ids: Column) -> Column:
-    """All C(f,2) upper-triangle pairs within one class's SORTED id
-    list — id_a < id_b by construction."""
-    return F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids) - (i + 1)),
-                lambda y: F.struct(
-                    x.alias("id_a"), y.alias("id_b")
-                ),
-            ),
-        )
-    )
-
-
 def _banded_frame(
     df: DataFrame,
     text_col: str,
@@ -808,7 +724,6 @@ def ngram_jaccard_all_pairs(
     threshold: float = 0.5,
     max_doc_freq: int | None = _DEFAULT_MAX_DOC_FREQ,
     hash_shingles: str | None = None,
-    collapse_exact_duplicates: bool = False,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard via an inverted-index self-join on
     shingles. No blocking key is needed: a pair has Jaccard > 0 iff it
@@ -865,18 +780,6 @@ def ngram_jaccard_all_pairs(
       the per-partition hash build side is |exploded|/partitions rows
       — bounded; AQE skew-join still splits oversized partitions;
     * each scan tokenizes once (:func:`shingle_frame`).
-
-    ``collapse_exact_duplicates=True`` groups byte-identical shingle
-    ARRAYS into classes first, runs the quadratic join at class grain
-    and expands doc pairs only after the threshold — provably identical
-    output (every pairwise quantity is a function of the class pair)
-    and candidate volume divided by r² on a corpus whose duplication is
-    r byte-identical replicas per doc (mirrors, re-crawls). Default
-    OFF: on corpora whose near-duplicates are PERTURBED (no
-    byte-identical mass) the class aggregate is pure overhead —
-    measured +11 % on the r6 sf1.0 bench corpus (49,943 distinct texts
-    of 50,000 docs), while a true 10×-replica corpus measures the r²
-    win. Choose by corpus: exact-dup-heavy → True.
     """
     if isinstance(max_doc_freq, _DefaultCap):
         global _default_cap_warned
@@ -894,10 +797,6 @@ def ngram_jaccard_all_pairs(
                 stacklevel=2,
             )
     base = shingle_frame(df, id_col, text_col, n)
-    if collapse_exact_duplicates:
-        return _jaccard_pairs_by_class(
-            base, threshold, max_doc_freq, hash_shingles
-        )
     sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
     ex = base.select("id", F.explode_outer("shl").alias("s"))
     if hash_shingles == "xxhash64":
@@ -936,128 +835,6 @@ def ngram_jaccard_all_pairs(
             F.round(jac, 6).alias("jaccard"),
         )
     )
-
-
-def _jaccard_pairs_by_class(
-    base: DataFrame,
-    threshold: float,
-    max_doc_freq: int | None,
-    hash_shingles: str | None,
-) -> DataFrame:
-    """Class-grained exact all-pairs Jaccard — the
-    ``collapse_exact_duplicates=True`` path of
-    :func:`ngram_jaccard_all_pairs` (see there for when to use it)."""
-    # exact-duplicate classes first (see _dup_class_frame): the
-    # quadratic inverted-index join runs at CLASS grain; doc pairs are
-    # expanded only after the threshold. On an r-replica corpus this
-    # divides candidate volume by r² with provably identical output
-    # (every pairwise quantity is a function of the class pair).
-    cls = _dup_class_frame(base)
-    ex = cls.select(
-        "cid",
-        F.size("shl").cast("long").alias("n_sh"),
-        F.col("__f").alias("f"),
-        F.explode_outer("shl").alias("s"),
-    )
-    if hash_shingles == "xxhash64":
-        ex = ex.select("cid", "n_sh", "f", F.xxhash64("s").alias("s"))
-    elif hash_shingles == "portable":
-        ex = ex.select(
-            "cid", "n_sh", "f", portable_token_hash(F.col("s")).alias("s")
-        )
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
-    if max_doc_freq is not None:
-        # doc frequency = Σ class multiplicities (identical to the
-        # per-doc count the pre-class form aggregated)
-        freq = ex.groupBy("s").agg(F.sum("f").alias("df_"))
-        ex = (
-            ex.join(freq, "s")
-            .where(F.col("df_") <= max_doc_freq)
-            .drop("df_")
-        )
-        # surviving-shingle count per class: the intra-class pairs'
-        # n_shared under the cap (uncapped it equals n_sh)
-        kept = ex.groupBy("cid").agg(
-            F.count(F.lit(1)).cast("long").alias("__n_kept")
-        )
-    else:
-        kept = None
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.cid") < F.col("b.cid")))
-        .groupBy(F.col("a.cid").alias("cid_a"), F.col("b.cid").alias("cid_b"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shared"),
-            F.max(F.col("a.n_sh")).alias("n_a"),
-            F.max(F.col("b.n_sh")).alias("n_b"),
-        )
-    )
-    jac = F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-    hits = inter.where(jac >= threshold)
-    ida = cls.select(F.col("cid").alias("cid_a"), F.col("ids").alias("ids_a"))
-    idb = cls.select(F.col("cid").alias("cid_b"), F.col("ids").alias("ids_b"))
-    cross = (
-        hits.join(ida, "cid_a")
-        .join(idb, "cid_b")
-        .select(
-            F.explode_outer(
-                _cross_class_pairs(F.col("ids_a"), F.col("ids_b"))
-            ).alias("__p"),
-            "n_shared",
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .select(
-            F.col("__p.id_a").alias("id_a"),
-            F.col("__p.id_b").alias("id_b"),
-            "n_shared",
-            "jaccard",
-        )
-    )
-    # intra-class pairs: identical shingle sets share every (surviving)
-    # shingle — n_shared is n_sh (or the capped class's kept count); a
-    # pair with NO surviving shared shingle never appears (the doc-grain
-    # join would not have emitted it either)
-    multi = cls.where(F.col("__f") >= 2).select(
-        "cid", "ids", F.size("shl").cast("long").alias("n_sh")
-    )
-    if kept is not None:
-        # capped: n_shared is the class's surviving-shingle count (an
-        # AGGREGATED column, so this filter cannot be pushed below the
-        # class aggregate and re-inline the shingle pipeline)
-        multi = multi.join(kept, "cid")
-        ns = F.col("__n_kept")
-        jac_i = ns / (F.lit(2) * F.col("n_sh") - ns)
-        multi = multi.where((ns >= 1) & (jac_i >= threshold))
-        ns_out = ns
-        jac_out = F.round(jac_i, 6)
-    else:
-        # uncapped: every intra-class pair has jaccard EXACTLY 1.0
-        # (n/(n+n-n)); the threshold decision is a driver-side constant
-        # — a size(shl)-based row predicate here would be PUSHED below
-        # the class aggregate and re-inline the shingle expression into
-        # the scan filter (measured 36 split() calls)
-        if threshold > 1.0:
-            multi = multi.where(F.lit(False))
-        ns_out = F.col("n_sh")
-        jac_out = F.lit(1.0)
-    intra = (
-        multi.select(
-            F.explode_outer(_intra_class_pairs(F.col("ids"))).alias("__p"),
-            ns_out.alias("n_shared"),
-            jac_out.alias("jaccard"),
-        )
-        .select(
-            F.col("__p.id_a").alias("id_a"),
-            F.col("__p.id_b").alias("id_b"),
-            "n_shared",
-            "jaccard",
-        )
-    )
-    return cross.unionByName(intra)
 
 
 def ngram_containment_pairs(

@@ -43,12 +43,12 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from soda_core_spark.functions.langid import langid_udf
+from soda_core_spark.functions.langid import attach_langid_jvm
 from soda_core_spark.functions.perplexity import (
     normalized_for_ppl,
     perplexity_prenorm_udf,
 )
-from soda_core_spark.functions.scrub import scrub_delta_udf
+from soda_core_spark.functions.scrub import scrubbed
 from soda_core_spark.functions.text import with_signals
 from soda_core_spark.operators.compiler import keep_predicate
 from soda_core_spark.operators.filter_rules import (
@@ -88,7 +88,7 @@ class QualityFilterPipeline:
         self,
         rules: tuple[FilterRule, ...] = DEFAULT_WEBTEXT_RULES,
         scrub: bool = True,
-        langid: bool | str = True,
+        langid: bool = True,
         perplexity: bool = True,
         text_column: str = "text",
         drop_columns: tuple[str, ...] = ("html",),
@@ -123,12 +123,10 @@ class QualityFilterPipeline:
                 f"scrub must be True/'kept', 'all', or False — got {scrub!r}"
             )
         self.scrub = scrub
-        # langid: "jvm" (default — the function-word model as pure InSet
-        # probes over the token array, bit-identical scores, no Arrow
-        # traffic) | "pandas" (the vectorized-UDF shape a real fastText
-        # binary requires) | False
-        if langid is True:
-            langid = "jvm"
+        # langid: the function-word model as pure InSet probes over the
+        # token array (bit-identical scores, no Arrow traffic)
+        if not isinstance(langid, bool):
+            raise ValueError(f"langid must be True or False — got {langid!r}")
         self.langid = langid
         self.perplexity = perplexity
         self.text_column = text_column
@@ -161,19 +159,14 @@ class QualityFilterPipeline:
         # signals: expensive arrays (words/bigrams) materialized once per
         # row; the lowered token array is kept when JVM langid follows so
         # language-ID reuses it instead of re-splitting the full text
-        jvm_langid = bool(self.langid) and self.langid != "pandas"
-        out = with_signals(df, self.text_column, keep_lowered_tokens=jvm_langid)
-        if jvm_langid:
-            from soda_core_spark.functions.langid import attach_langid_jvm
-
+        out = with_signals(df, self.text_column, keep_lowered_tokens=self.langid)
+        if self.langid:
             out = attach_langid_jvm(out, self.text_column, lowered_tokens_col="__wl")
         # all scorer UDFs in ONE projection level and one eval type → the
         # ExtractPythonUDFs rule fuses them into a single ArrowEvalPython
         # node (one Arrow round-trip per batch; shared input columns cross
         # once). JVM langid runs outside the Arrow node entirely.
         udf_cols = {}
-        if self.langid == "pandas":
-            udf_cols["_langid"] = langid_udf(text)
         if self.perplexity:
             # normalization runs JVM-side (codegen regexp chain, verified
             # byte-identical to the pandas form); only the trigram-table
@@ -183,23 +176,15 @@ class QualityFilterPipeline:
         if self.scrub:
             # delta form: the UDF returns NULL for rows the scrub leaves
             # unchanged, so the Arrow batch back to the JVM carries only
-            # the few % of rows that actually contain PII/toxicity —
-            # coalesce(delta, text) reconstructs the full column
-            # byte-identically. (A JVM input-mask via scrub.can_match_col
-            # was A/B-measured 6 % SLOWER here: two extra Java-regex
-            # passes over full text cost more than the Arrow-in savings
-            # on this corpus. The helper remains for transfer-bound
-            # deployments — much larger documents or remote shuffle.)
-            udf_cols["__scrub_delta"] = scrub_delta_udf(text)
+            # the few % of rows that actually contain PII/toxicity — the
+            # coalesce with text reconstructs the full column
+            # byte-identically. (A JVM input-mask that shipped NULL for
+            # non-candidate rows was A/B-measured 6 % SLOWER here: two
+            # extra Java-regex passes over full text cost more than the
+            # Arrow-in savings on this corpus.)
+            udf_cols["__scrubbed"] = scrubbed(text)
         if udf_cols:
             out = out.withColumns(udf_cols)
-        if self.langid == "pandas":
-            out = out.withColumns(
-                {
-                    "langid_pred": F.col("_langid.langid_pred"),
-                    "langid_conf": F.col("_langid.langid_conf"),
-                }
-            ).drop("_langid")
         fail_flags = {}
         for r in self.rules:
             try:
@@ -216,13 +201,13 @@ class QualityFilterPipeline:
             "keep", keep_predicate([F.col(f"fail_{r.name}") for r in self.rules])
         )
         if self.scrub:
-            scrubbed = F.coalesce(F.col("__scrub_delta"), text)
+            text_scrubbed = F.col("__scrubbed")
             if self.scrub == "kept":
                 # dropped rows' scrubbed text is dead bytes at 100 TB —
                 # NULL it JVM-side (the regex already ran in the fused
                 # node; this masks the OUTPUT, costing nothing)
-                scrubbed = F.when(F.col("keep"), scrubbed)
-            out = out.withColumn("text_scrubbed", scrubbed).drop("__scrub_delta")
+                text_scrubbed = F.when(F.col("keep"), text_scrubbed)
+            out = out.withColumn("text_scrubbed", text_scrubbed).drop("__scrubbed")
         out = out.withColumn(LINEAGE_KEY, host_col())
         return out
 

@@ -3,8 +3,11 @@
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 from soda_core_spark.sources.webtext_gen import write_web_pages_parquet
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_cli_run(tmp_path):
@@ -13,7 +16,7 @@ def test_cli_run(tmp_path):
         [sys.executable, "-m", "soda_core_spark.cli",
          "--input", inp, "--output", str(tmp_path / "out"),
          "--lineage", str(tmp_path / "lineage"), "--local-cpus", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     summary = json.loads([l for l in out.stdout.splitlines() if l.startswith("{")][-1])
@@ -27,12 +30,12 @@ def test_cli_resumable(tmp_path):
             "--input", inp, "--output", str(tmp_path / "out"),
             "--state", str(tmp_path / "state"), "--buckets", "3",
             "--local-cpus", "4"]
-    out = subprocess.run(args, capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    out = subprocess.run(args, capture_output=True, text=True, cwd=ROOT, timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
     summary = json.loads([l for l in out.stdout.splitlines() if l.startswith("{")][-1])
     assert summary == {"buckets": 3, "n_docs": 400, "n_kept": summary["n_kept"]}
     # second invocation: everything already done, instant resume
-    out2 = subprocess.run(args, capture_output=True, text=True, cwd="/root/repo", timeout=300)
+    out2 = subprocess.run(args, capture_output=True, text=True, cwd=ROOT, timeout=300)
     summary2 = json.loads([l for l in out2.stdout.splitlines() if l.startswith("{")][-1])
     assert summary2 == summary
 

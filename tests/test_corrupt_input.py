@@ -2,11 +2,14 @@
 ignoreCorruptFiles, reconcile counts — no silent document loss."""
 
 import os
+from pathlib import Path
 
 import pytest
 
 from soda_core_spark.sources.tables import corrupt_file_audit
 from soda_core_spark.sources.webtext_gen import write_web_pages_parquet
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -76,7 +79,7 @@ def test_cli_data_source_audit(broken_dataset, tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "data-source", "audit",
          "-ds", f"pages={path}"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=ROOT, timeout=120,
     )
     assert out.returncode == 1  # corrupt found -> check-failure exit code
     rep = _json.loads(out.stdout.strip().splitlines()[-1])
@@ -90,6 +93,6 @@ def test_cli_data_source_audit(broken_dataset, tmp_path):
     out2 = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "data-source", "audit",
          "-ds", clean],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=ROOT, timeout=120,
     )
     assert out2.returncode == 0

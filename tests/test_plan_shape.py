@@ -50,10 +50,6 @@ def test_jvm_langid_outside_arrow_node(web_df):
     arrow_lines = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
     assert len(arrow_lines) == 1
     assert "langid" not in arrow_lines[0]
-    # pandas mode keeps langid inside the Arrow node
-    plan_p = _plan(QualityFilterPipeline(langid="pandas").annotate(web_df))
-    arrow_p = [l for l in plan_p.splitlines() if "ArrowEvalPython" in l]
-    assert len(arrow_p) == 1 and "langid" in arrow_p[0]
 
 
 def test_filter_pushdown_to_parquet(spark):

@@ -12,6 +12,7 @@ Reference semantics under test:
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,6 +27,8 @@ from soda_core_spark.plans.selectors import (
     CheckSelector,
     CheckSelectorParseError,
 )
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -318,7 +321,7 @@ def _run_cli(*args):
         [sys.executable, "-m", "soda_core_spark.cli", "contract", "verify", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=300,
     )
 
@@ -523,7 +526,7 @@ def test_cli_contract_test_parse_only(tmp_path_factory):
     )
     r = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "contract", "test", "-c", ok],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=ROOT, timeout=120,
     )
     assert r.returncode == 0, r.stderr[-500:]
     assert "is valid" in r.stdout
@@ -533,7 +536,7 @@ def test_cli_contract_test_parse_only(tmp_path_factory):
     )
     r = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "contract", "test", "-c", bad],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=ROOT, timeout=120,
     )
     assert r.returncode == 3
     assert "INVALID" in r.stderr
@@ -665,7 +668,7 @@ def test_contract_path_selector_matches_absolute_source_path(spark, people):
     c = contract_from_yaml(
         "dataset: people_pathsel\nchecks:\n  - row_count:\n      must_be_greater_than: 0\n"
     )
-    c.source_path = "/root/repo/contracts/webtext.yml"  # absolute, as the CLI passes it
+    c.source_path = str(ROOT / "contracts" / "webtext.yml")  # absolute, as the CLI passes it
     res = verify_contract(
         spark, c, people, check_selectors=["contract_path=contracts/*.yml"]
     )
@@ -799,7 +802,7 @@ def test_cli_data_source_test(people_parquet):
     ok = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "data-source", "test",
          "-ds", f"people={people_parquet}", "--local-cpus", "2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert ok.returncode == 0, ok.stderr[-2000:]
     assert "session ok" in ok.stdout
@@ -809,7 +812,7 @@ def test_cli_data_source_test(people_parquet):
     bad = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "data-source", "test",
          "-ds", "nope=/does/not/exist.parquet", "--local-cpus", "2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert bad.returncode == 3
     assert "NOT readable" in bad.stderr
@@ -951,7 +954,7 @@ def test_cli_data_source_create(tmp_path_factory):
     r = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "data-source", "create",
          "-f", path],
-        capture_output=True, text=True, cwd="/root/repo", timeout=60,
+        capture_output=True, text=True, cwd=ROOT, timeout=60,
     )
     assert r.returncode == 0, r.stderr
     body = open(path).read()
@@ -960,7 +963,7 @@ def test_cli_data_source_create(tmp_path_factory):
     r2 = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "data-source", "create",
          "-f", path],
-        capture_output=True, text=True, cwd="/root/repo", timeout=60,
+        capture_output=True, text=True, cwd=ROOT, timeout=60,
     )
     assert r2.returncode == 3
     assert "already exists" in r2.stderr
@@ -968,7 +971,7 @@ def test_cli_data_source_create(tmp_path_factory):
     r3 = subprocess.run(
         [sys.executable, "-m", "soda_core_spark.cli", "data-source", "create",
          "-f", path + ".2", "-t", "postgres"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=60,
+        capture_output=True, text=True, cwd=ROOT, timeout=60,
     )
     assert r3.returncode == 3
 
@@ -978,10 +981,12 @@ def test_cli_data_source_discover(spark, capsys):
     include/exclude (OR within include, AND-not for exclude) and hides
     __soda_temp tables (reference discovery.py:19-31)."""
     import shutil
+    from urllib.parse import urlparse
 
     from soda_core_spark.cli import main as cli_main
 
-    shutil.rmtree("/root/repo/spark-warehouse/disc_t.db", ignore_errors=True)
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    shutil.rmtree(Path(warehouse) / "disc_t.db", ignore_errors=True)
     spark.sql("CREATE DATABASE IF NOT EXISTS disc_t")
     try:
         for t in ("events_a", "users_b", "other_c", "__soda_temp_scan"):

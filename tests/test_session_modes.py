@@ -7,10 +7,13 @@ real sessions.
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 from soda_core_spark.sources.session import build_remote_uri, get_session
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_build_remote_uri_full():
@@ -50,7 +53,7 @@ def test_active_session_mode_without_session_raises():
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=120,
     )
     assert "OK" in r.stdout, r.stderr[-1500:]

@@ -14,8 +14,11 @@ known gaps; applyInPandasWithState remains the executed-and-tested path).
 import importlib.util
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
 
 SCRIPT = r"""
 import sys
@@ -113,7 +116,7 @@ def test_host_running_totals_tws_matches_batch(tmp_path):
         [sys.executable, "-c", SCRIPT, str(tmp_path)],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=480,
     )
     assert r.returncode == 0, r.stderr[-3000:]

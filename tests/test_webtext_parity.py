@@ -2,6 +2,8 @@
 reproduce the reference oracle's keep/drop decisions (F1 ≥ 0.99) and produce
 byte-identical scrubbed text per url."""
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
 from pyspark.sql import types as T
@@ -156,7 +158,7 @@ def test_example_contract_verifies(spark, web_pages_df):
     from soda_core_spark import CheckOutcome, verify_contract
     from soda_core_spark.plans.model import contract_from_yaml
 
-    with open("/root/repo/contracts/web_pages.yml") as fh:
+    with open(Path(__file__).resolve().parents[1] / "contracts" / "web_pages.yml") as fh:
         contract = contract_from_yaml(fh.read())
     annotated = QualityFilterPipeline().annotate(web_pages_df)
     result = verify_contract(
