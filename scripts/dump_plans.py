@@ -41,7 +41,7 @@ def main() -> int:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:] or DEFAULT_QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 
     from pyspark.sql import SparkSession
 

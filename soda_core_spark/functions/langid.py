@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from soda_core_spark.functions.text import EN_STOPWORDS
+from soda_core_spark.functions.text import EN_STOPWORDS, words_col
 
 #: frozen per-language function-word sets (model weights, in effect)
 LANG_WORDS: dict[str, frozenset[str]] = {
@@ -131,24 +131,14 @@ def attach_langid_jvm(df, text_col: str = "text", lowered_tokens_col: str | None
         df = df.withColumnRenamed(lowered_tokens_col, "__wl")
     else:
         text = F.coalesce(F.col(text_col), F.lit(""))
-        wl = F.filter(F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != "")
+        wl = words_col(F.lower(text))
         df = df.withColumn("__wl", wl)
-    n = F.size(F.col("__wl"))
-    fcols = {}
-    for lang in LANGS:
-        hits = F.size(F.filter(F.col("__wl"), _member_fn(LANG_WORDS[lang])))
-        fcols[f"__lid_{lang}"] = F.when(
-            n > 0, hits.cast("double") / n.cast("double")
-        ).otherwise(F.lit(0.0))
+    fcols = {f"__lid_{lang}": _lang_fraction(F.col("__wl"), lang) for lang in LANGS}
     df = df.withColumns(fcols)
-    df = df.withColumn(
-        "langid_conf", F.greatest(*[F.col(f"__lid_{lang}") for lang in LANGS])
+    df = df.withColumn("langid_conf", F.greatest(*[F.col(c) for c in fcols]))
+    pred = _lang_argmax(
+        {lang: F.col(f"__lid_{lang}") for lang in LANGS}, F.col("langid_conf")
     )
-    pred = F.when(F.col("langid_conf") <= 0.0, F.lit("und"))
-    for lang in LANGS:  # first max in sorted-lang order == pandas idxmax
-        pred = pred.when(
-            F.col(f"__lid_{lang}") == F.col("langid_conf"), F.lit(lang)
-        )
     return df.withColumn("langid_pred", pred).drop("__wl", *fcols)
 
 
@@ -159,20 +149,34 @@ def _member_fn(word_set: frozenset[str]):
     return lambda t: t.isin(words_list)
 
 
+def _lang_fraction(
+    lowered_words: Column, lang: str, digits: int | None = None
+) -> Column:
+    """Fraction of ``lowered_words`` in ``lang``'s function-word set
+    (rounded to ``digits`` when given); 0.0 for a token-less row."""
+    n = F.size(lowered_words)
+    hits = F.size(F.filter(lowered_words, _member_fn(LANG_WORDS[lang])))
+    frac = hits.cast("double") / n.cast("double")
+    if digits is not None:
+        frac = F.round(frac, digits)
+    return F.when(n > 0, frac).otherwise(F.lit(0.0))
+
+
+def _lang_argmax(fracs: dict[str, Column], conf: Column) -> Column:
+    """Predicted language: the first of :data:`LANGS` whose fraction equals
+    ``conf`` (their max) — pandas ``idxmax`` order — or 'und' when no
+    language scores."""
+    pred = F.when(conf <= 0.0, F.lit("und"))
+    for lang in LANGS:
+        pred = pred.when(fracs[lang] == conf, F.lit(lang))
+    return pred
+
+
 def langid_jvm_from_words(lowered_words: Column) -> dict[str, Column]:
     """JVM langid over an already-lowercased token array column."""
-    n = F.size(lowered_words)
-    fracs = {}
-    for lang in LANGS:
-        hits = F.size(F.filter(lowered_words, _member_fn(LANG_WORDS[lang])))
-        fracs[lang] = F.when(
-            n > 0, hits.cast("double") / n.cast("double")
-        ).otherwise(F.lit(0.0))
-    conf = F.greatest(*fracs.values()) if len(fracs) > 1 else next(iter(fracs.values()))
-    pred = F.when(conf <= 0.0, F.lit("und"))
-    for lang in LANGS:  # first max in sorted-lang order == pandas idxmax
-        pred = pred.when(fracs[lang] == conf, F.lit(lang))
-    return {"langid_pred": pred, "langid_conf": conf}
+    fracs = {lang: _lang_fraction(lowered_words, lang) for lang in LANGS}
+    conf = F.greatest(*fracs.values())
+    return {"langid_pred": _lang_argmax(fracs, conf), "langid_conf": conf}
 
 
 def lang_stopword_density(lowered_words: Column, lang: Column) -> Column:
@@ -189,14 +193,9 @@ def lang_stopword_density(lowered_words: Column, lang: Column) -> Column:
     zero-quality; token-less documents yield 0.0 like the monolingual
     form. 6 dp rounding pins the integer/integer division cross-engine.
     """
-    n = F.size(lowered_words)
     result = None
     for L in LANGS:
-        hits = F.size(F.filter(lowered_words, _member_fn(LANG_WORDS[L])))
-        d = F.when(
-            n > 0,
-            F.round(hits.cast("double") / n.cast("double"), 6),
-        ).otherwise(F.lit(0.0))
+        d = _lang_fraction(lowered_words, L, digits=6)
         result = (
             F.when(lang == L, d) if result is None else result.when(lang == L, d)
         )
@@ -235,10 +234,7 @@ def paragraph_lang_profile(
     exploded = df.select(
         F.col(id_col), F.explode(paras).alias("__para")
     )
-    wl = F.filter(
-        F.split(F.lower(F.col("__para")), "[ \\t\\n\\r]+"),
-        lambda w: w != "",
-    )
+    wl = words_col(F.lower(F.col("__para")))
     pred = langid_jvm_from_words(wl)["langid_pred"]
     counts = (
         exploded.select(F.col(id_col), pred.alias("__plang"))

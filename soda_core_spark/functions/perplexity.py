@@ -204,23 +204,11 @@ def perplexity_prenorm_udf(normalized: pd.Series) -> pd.Series:
 # Scoring above uses a model trained at import time on the embedded seed
 # corpus; a real pipeline trains the n-gram LM on a reference corpus as a
 # Spark job (the KenLM lmplz step). train_char_trigram_lm is that job for
-# this model family: per-document normalize (JVM), explode char trigrams,
-# one count shuffle, add-k conditional log-probs. The bigram denominator
-# needs no second pass — the training definition above only counts bigrams
-# at trigram-start positions, so bi(c1c2) == Σ_c3 tri(c1c2c3), a window
-# sum over the trigram counts.
-
-
-def normalized_body_col(text: Column) -> Column:
-    """The JVM twin of ``_normalize`` + whitespace-collapse: lowercase,
-    non-[a-z ] → space, runs collapsed, trimmed."""
-    from pyspark.sql import functions as F
-
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(text), "[^a-z ]", " "), " +", " "
-        )
-    )
+# this model family: per-document normalize (JVM, normalized_for_ppl),
+# explode char trigrams, one count shuffle, add-k conditional log-probs.
+# The bigram denominator needs no second pass — the training definition
+# above only counts bigrams at trigram-start positions, so
+# bi(c1c2) == Σ_c3 tri(c1c2c3), a window sum over the trigram counts.
 
 
 def train_char_trigram_lm(df, text_col: str = "text", k: float = _K):
@@ -242,7 +230,7 @@ def train_char_trigram_lm(df, text_col: str = "text", k: float = _K):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    body = normalized_body_col(F.col(text_col))
+    body = normalized_for_ppl(F.col(text_col))
     tris = F.expr(
         "transform(sequence(1, greatest(length(__body) - 2, 0)),"
         " i -> substring(__body, i, 3))"

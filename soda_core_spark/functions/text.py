@@ -37,8 +37,12 @@ EN_STOPWORDS = (
 
 
 def words_col(text: Column) -> Column:
-    """Non-empty whitespace-separated tokens (Python ``str.split()``
-    semantics)."""
+    """Tokens of ``text``: split on ASCII whitespace runs ``[ \\t\\n\\r]+``,
+    empty tokens dropped. This is the tokenization contract every
+    Spark-side operator uses and the DuckDB oracles replay
+    (``list_filter(regexp_split_to_array(…), x -> x <> '')``). It is NOT
+    Python ``str.split()``, whose unicode whitespace set (NBSP, ``\\x0c``,
+    …) would diverge on real HTML-derived text. NULL text gives NULL."""
     return F.filter(F.split(text, "[ \\t\\n\\r]+"), lambda w: w != "")
 
 
@@ -134,24 +138,15 @@ def token_count_bpe_ish(text: Column) -> Column:
     return alnum_runs + symbols
 
 
+def normalized_text(text: Column) -> Column:
+    """Whitespace-collapsed, lowercased text — the exact-dedup identity."""
+    return F.lower(F.regexp_replace(F.trim(text), "[ \\t\\n\\r]+", " "))
+
+
 def doc_fingerprint(text: Column) -> Column:
-    """64-bit document fingerprint: xxhash64 over whitespace-normalized,
-    lowercased text — the exact-dedup key. JVM-side, no Python."""
-    normalized = F.lower(F.regexp_replace(F.trim(text), "[ \\t\\n\\r]+", " "))
-    return F.xxhash64(normalized)
-
-
-def bigrams_col(words: Column) -> Column:
-    """Word 2-gram array (NULL when fewer than 2 words)."""
-    n = F.size(words)
-    return F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(words, 1, n - 1),
-            F.slice(words, 2, n - 1),
-            lambda a, b: F.concat_ws("\x1f", a, b),
-        ),
-    )
+    """64-bit document fingerprint: xxhash64 over :func:`normalized_text`
+    — the exact-dedup key. JVM-side, no Python."""
+    return F.xxhash64(normalized_text(text))
 
 
 def with_signals(df, text_col: str = "text", keep_lowered_tokens: bool = False):

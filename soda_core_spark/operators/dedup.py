@@ -30,14 +30,11 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from soda_core_spark.functions.text import normalized_text, words_col
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
-
-
-def normalized_text(text: Column) -> Column:
-    """Whitespace-collapsed, lowercased text — the exact-dedup identity."""
-    return F.lower(F.regexp_replace(F.trim(text), "[ \\t\\n\\r]+", " "))
 
 
 def exact_dedup(
@@ -156,34 +153,13 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     key at corpus scale and a cross-engine hazard (DuckDB's
     ``array_to_string([])`` is NULL while Spark's ``concat_ws`` is '',
     so the two engines disagreed on exactly these rows)."""
-    words = F.filter(
-        F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != ""
-    )
-    k = F.size(words)
-    cols = [F.slice(words, i + 1, k - (n - 1)) for i in range(n)]
-    grams = cols[0]
-    for c in cols[1:]:
-        grams = F.zip_with(grams, c, lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(k >= n, F.array_distinct(grams)).otherwise(
-        F.when(k > 0, F.array(F.concat_ws(" ", words))).otherwise(
-            F.array().cast("array<string>")
-        )
-    )
-
-
-def _words_of(text: Column) -> Column:
-    """Lowercased non-empty whitespace tokens — the shared tokenization
-    of :func:`shingles_col`, exposed so callers can materialize it ONCE
-    per row (see :func:`shingle_frame`)."""
-    return F.filter(
-        F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != ""
-    )
+    return _shingles_of_words(words_col(F.lower(text)), n)
 
 
 def _shingles_of_words(w: Column, n: int) -> Column:
-    """Shingle array from an already-materialized token-array column.
-    Value-identical to :func:`shingles_col` (same slice/zip_with grams,
-    same 1..n-1-word whole-text shingle, same empty-set policy)."""
+    """Shingle array from a token-array column — the one shingler
+    (:func:`shingles_col` inlines the tokenization; :func:`shingle_frame`
+    passes a materialized token attribute)."""
     k = F.size(w)
     cols = [F.slice(w, i + 1, k - (n - 1)) for i in range(n)]
     grams = cols[0]
@@ -232,7 +208,7 @@ def shingle_frame(
     step = filtered.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in extra_cols],
-        _words_of(t).alias("__w"),
+        words_col(F.lower(t)).alias("__w"),
     )
     return step.select(
         "id",
@@ -246,22 +222,6 @@ def _salted_hash(i: int):
     # (lambda s, i=i: ...) is seen by pyspark as the two-param
     # (element, index) form and the salt silently becomes the array index
     return lambda s: F.xxhash64(F.lit(i), s)
-
-
-def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
-    """Array of ``bands`` band keys; docs sharing ANY band key are
-    candidates. Key = hash of (band index, the band's signature slice)."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), F.concat_ws(",", *[
-                    F.element_at(signature, b * rows + r + 1).cast("string")
-                    for r in range(rows)
-                ])
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def plan_lsh_params(
@@ -334,11 +294,33 @@ def portable_token_hash(col: Column) -> Column:
 PORTABLE_HASH_BITS = 60
 
 
+def _shingle_key(col: Column, mode: str | None) -> Column:
+    """Join key for a shingle (or gram) string under a ``hash_shingles``
+    mode: ``None`` keeps the string, ``"xxhash64"`` the JVM-intrinsic
+    64-bit hash, ``"portable"`` :func:`portable_token_hash` (replayable
+    by a cross-engine oracle, collisions included)."""
+    if mode is None:
+        return col
+    if mode == "xxhash64":
+        return F.xxhash64(col)
+    if mode == "portable":
+        return portable_token_hash(col)
+    raise ValueError(
+        f"hash mode must be None, 'xxhash64' or 'portable', got {mode!r}"
+    )
 
 
 def _md5_salted(i: int):
     # single-param lambda via closure — same reason as _salted_hash
     return lambda s: F.md5(F.concat_ws("|", F.lit(str(i)), s))
+
+
+def _minhash_mins(sh: Column, num_hashes: int, portable: bool) -> list[Column]:
+    """MinHash signature m_i = ``array_min(transform(sh, hash_i))`` over a
+    MATERIALIZED shingle-array attribute: xxhash64 salted by i, or in
+    portable mode the lexicographic min of md5("i|shingle") strings."""
+    salted = _md5_salted if portable else _salted_hash
+    return [F.array_min(F.transform(sh, salted(i))) for i in range(num_hashes)]
 
 
 def _band_keys_expr(
@@ -361,43 +343,30 @@ def _band_keys_expr(
     set). The md5/xxhash64 work per shingle is unchanged — that is the
     declared computation."""
     rows = num_hashes // bands
+    mins = _minhash_mins(sh, num_hashes, portable_hash)
+    band = [mins[b * rows : (b + 1) * rows] for b in range(bands)]
     if portable_hash:
-        mins = [
-            F.array_min(F.transform(sh, _md5_salted(i)))
-            for i in range(num_hashes)
-        ]
+        # md5("b,m_{b·rows},…,m_{b·rows+rows-1}")
         return F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.lit(str(b)),
-                        *[mins[b * rows + r] for r in range(rows)],
-                    )
-                )
-                for b in range(bands)
-            ]
+            *[F.md5(F.concat_ws(",", F.lit(str(b)), *ms)) for b, ms in enumerate(band)]
         )
-    mins = [
-        F.array_min(F.transform(sh, _salted_hash(i)))
-        for i in range(num_hashes)
-    ]
-    # same band-key derivation lsh_band_keys produces over materialized
-    # m_i columns: xxhash64(b, concat_ws(",", m_{b·rows}..m_{b·rows+rows-1}))
+    # xxhash64(b, concat_ws(",", m_{b·rows}..m_{b·rows+rows-1}))
     return F.array(
         *[
-            F.xxhash64(
-                F.lit(b),
-                F.concat_ws(
-                    ",",
-                    *[
-                        mins[b * rows + r].cast("string")
-                        for r in range(rows)
-                    ],
-                ),
-            )
-            for b in range(bands)
+            F.xxhash64(F.lit(b), F.concat_ws(",", *[m.cast("string") for m in ms]))
+            for b, ms in enumerate(band)
         ]
+    )
+
+
+def _lsh_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct candidate pairs ``(id_a, id_b)``, id_a < id_b, from an
+    ``(id, band)`` frame: the band self-join over bare 16-byte rows."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -454,12 +423,7 @@ def minhash_near_duplicates(
             _band_keys_expr(F.col("sh"), num_hashes, bands, portable_hash)
         ).alias("band"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    pairs = _lsh_candidates(banded)
     sh_a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     sh_b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     enriched = pairs.join(sh_a, "id_a").join(sh_b, "id_b")
@@ -489,7 +453,7 @@ def ngram_jaccard_pairs(
     step = df.select(
         F.col(id_col).alias("id"),
         key.alias("k"),
-        _words_of(F.col(text_col)).alias("__w"),
+        words_col(F.lower(F.col(text_col))).alias("__w"),
     )
     base = step.select(
         "id", "k", _shingles_of_words(F.col("__w"), n).alias("sh")
@@ -540,7 +504,7 @@ def simhash_df(
     else:
         th = F.xxhash64
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(F.lower(t), "[ \\t\\n\\r]+"), lambda w: w != "")
+    words = words_col(F.lower(t))
     ex = (
         _spread(df)
         .select(F.col(id_col).alias("id"), F.explode(words).alias("w"))
@@ -656,7 +620,7 @@ def simhash64(text: Column) -> Column:
     but JVM-side AND re-evaluated per bit (no CSE in higher-order
     functions); for anything beyond attaching one column, use
     :func:`simhash_df` (explode→groupBy — each token hashed once)."""
-    words = F.filter(F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != "")
+    words = words_col(F.lower(text))
     hashes = F.transform(words, lambda w: F.xxhash64(w))
 
     def _vote_fn(b: int):
@@ -704,6 +668,43 @@ def _banded_frame(
             _band_keys_expr(F.col("shl"), num_hashes, bands, portable_hash)
         ).alias("band"),
     )
+
+
+def _shared_shingle_counts(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_doc_freq: int | None,
+    hash_shingles: str | None,
+) -> DataFrame:
+    """Per pair of documents sharing at least one shingle: ``id_a < id_b``,
+    ``n_shared`` (shingles in common), ``n_a`` and ``n_b`` (each side's
+    distinct-shingle count) — the pair-count core of
+    :func:`ngram_jaccard_all_pairs` and :func:`ngram_containment_pairs`.
+
+    Inverted-index self-join on the (optionally hashed,
+    :func:`_shingle_key`) shingle, after dropping shingles in more than
+    ``max_doc_freq`` documents; the join carries a SHUFFLE_HASH hint and
+    the pair aggregate carries ONLY the count; the sizes re-attach by
+    two broadcast joins on the aggregate output (plan rationale in
+    :func:`ngram_jaccard_all_pairs`)."""
+    base = shingle_frame(df, id_col, text_col, n)
+    sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
+    ex = base.select("id", F.explode_outer("shl").alias("s"))
+    ex = ex.select("id", _shingle_key(F.col("s"), hash_shingles).alias("s"))
+    if max_doc_freq is not None:
+        freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
+        ex = ex.join(freq, "s").where(F.col("df_") <= max_doc_freq).drop("df_")
+    a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
+    inter = (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    )
+    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
 
 
 class _DefaultCap(int):
@@ -796,38 +797,12 @@ def ngram_jaccard_all_pairs(
                 "the cap explicitly.",
                 stacklevel=2,
             )
-    base = shingle_frame(df, id_col, text_col, n)
-    sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
-    ex = base.select("id", F.explode_outer("shl").alias("s"))
-    if hash_shingles == "xxhash64":
-        ex = ex.select("id", F.xxhash64("s").alias("s"))
-    elif hash_shingles == "portable":
-        ex = ex.select("id", portable_token_hash(F.col("s")).alias("s"))
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
-    if max_doc_freq is not None:
-        freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
-        ex = (
-            ex.join(freq, "s")
-            .where(F.col("df_") <= max_doc_freq)
-            .drop("df_")
-        )
-    a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    counts = _shared_shingle_counts(
+        df, id_col, text_col, n, max_doc_freq, hash_shingles
     )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
     jac = F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
     return (
-        inter.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
-        .where(jac >= threshold)
+        counts.where(jac >= threshold)
         .select(
             "id_a",
             "id_b",
@@ -864,32 +839,9 @@ def ngram_containment_pairs(
     rows/buffers are the dominant cost — with the size table
     re-attached by broadcast joins on the aggregate OUTPUT, a
     SHUFFLE_HASH self-join, and one tokenization per scan."""
-    base = shingle_frame(df, id_col, text_col, n)
-    sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
-    ex = base.select("id", F.explode_outer("shl").alias("s"))
-    if hash_shingles == "xxhash64":
-        ex = ex.select("id", F.xxhash64("s").alias("s"))
-    elif hash_shingles == "portable":
-        ex = ex.select("id", portable_token_hash(F.col("s")).alias("s"))
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
-    if max_doc_freq is not None:
-        freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
-        ex = (
-            ex.join(freq, "s").where(F.col("df_") <= max_doc_freq).drop("df_")
-        )
-    a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    inter = _shared_shingle_counts(
+        df, id_col, text_col, n, max_doc_freq, hash_shingles
     )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    inter = inter.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
     ca = F.col("n_shared") / F.col("n_a")
     cb = F.col("n_shared") / F.col("n_b")
     contained = F.when(ca > cb, F.col("id_a")).when(cb > ca, F.col("id_b")).otherwise(
@@ -957,7 +909,7 @@ def decontaminate(
     t = F.coalesce(F.col(text_col), F.lit(""))
     bench_sh = (
         benchmark_df.where(F.length(F.trim(t)) > 0)
-        .select(_words_of(t).alias("__w"))
+        .select(words_col(F.lower(t)).alias("__w"))
         .select(
             F.explode_outer(
                 _shingles_of_words(F.col("__w"), n)
@@ -966,20 +918,11 @@ def decontaminate(
         .distinct()
     )
     base = shingle_frame(df, id_col, text_col, n)
+    key = _shingle_key(F.col("s"), hash_shingles)
     ex = base.select("id", F.explode_outer("shl").alias("s"))
-    if hash_shingles == "xxhash64":
-        ex = ex.select("id", F.xxhash64("s").alias("s"))
-        bench_sh = bench_sh.select(F.xxhash64("s").alias("s")).distinct()
-    elif hash_shingles == "portable":
-        ex = ex.select("id", portable_token_hash(F.col("s")).alias("s"))
-        bench_sh = bench_sh.select(
-            portable_token_hash(F.col("s")).alias("s")
-        ).distinct()
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
+    ex = ex.select("id", key.alias("s"))
+    if hash_shingles is not None:
+        bench_sh = bench_sh.select(key.alias("s")).distinct()
     marked = bench_sh.select("s", F.lit(1).alias("__hit"))
     per_doc = (
         ex.join(
@@ -1034,7 +977,7 @@ def duplicated_ngram_stats(
     # form embedded the split inside the transform lambda, re-tokenizing
     # per WINDOW (O(k) splits per doc) and again for the totals pass
     step = _spread(df).select(
-        F.col(id_col).alias("id"), _words_of(t).alias("__w")
+        F.col(id_col).alias("id"), words_col(F.lower(t)).alias("__w")
     )
     w = F.col("__w")
     k = F.size(w)
@@ -1110,7 +1053,7 @@ def duplicated_spans(
     # rationale; the semi-join below ignores the NULL row an empty
     # window array emits)
     step = _spread(df).select(
-        F.col(id_col).alias("id"), _words_of(t).alias("__w")
+        F.col(id_col).alias("id"), words_col(F.lower(t)).alias("__w")
     )
     wq = F.col("__w")
     k = F.size(wq)
@@ -1178,7 +1121,7 @@ def trim_spans(
     )
     out = df.join(sp, id_col, "left")
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, "[ \\t\\n\\r]+"), lambda w: w != "")
+    words = words_col(t)
     empty_spans = F.coalesce(
         F.col("__spans"),
         F.array().cast("array<struct<span_start:bigint,span_end:bigint>>"),
@@ -1971,44 +1914,21 @@ def minhash_calibration(
     the same 16-byte band join as the dedup path; signature vectors
     re-attach by two id-joins (num_hashes values per side, once per
     pair)."""
-    rows = num_hashes // bands
     base = shingle_frame(df, id_col, text_col, shingle_n).withColumnRenamed(
         "shl", "sh"
     )
     # signatures as per-row array_min expressions over the materialized
     # shingle attribute (the r6 minhash_near_duplicates shape — no
     # explode → groupBy(id) aggregate, no portable-mode SortAggregate)
-    if portable_hash:
-        sig_exprs = [
-            F.array_min(F.transform(F.col("sh"), _md5_salted(i))).alias(
-                f"m{i}"
-            )
-            for i in range(num_hashes)
-        ]
-    else:
-        sig_exprs = [
-            F.array_min(F.transform(F.col("sh"), _salted_hash(i))).alias(
-                f"m{i}"
-            )
-            for i in range(num_hashes)
-        ]
-    sig = base.select("id", *sig_exprs)
+    mins = _minhash_mins(F.col("sh"), num_hashes, portable_hash)
+    sig = base.select("id", *[m.alias(f"m{i}") for i, m in enumerate(mins)])
     banded = base.select(
         "id",
         F.explode_outer(
             _band_keys_expr(F.col("sh"), num_hashes, bands, portable_hash)
         ).alias("band"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    pairs = _lsh_candidates(banded)
     sig_a = sig.select(
         F.col("id").alias("id_a"),
         *[F.col(f"m{i}").alias(f"a{i}") for i in range(num_hashes)],
@@ -2088,8 +2008,6 @@ def boilerplate_ngrams(
     paragraph-dedup key path."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    from soda_core_spark.functions.text import words_col
-
     toks = words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     t = F.col("__toks")
     # guard: sequence(1, 0) DESCENDS in Spark (step defaults to -1 when
@@ -2161,6 +2079,10 @@ def winnow_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError("winnow_fingerprints: k and w must be >= 1")
+    # no string-key mode: the ~2/(w+1) selection density assumes window
+    # minima over a random (hashed) order
+    if hash not in ("xxhash64", "portable"):
+        raise ValueError(f"winnow_fingerprints: unknown hash {hash!r}")
     from pyspark.sql import Window
 
     t = F.coalesce(F.col(text_col), F.lit(""))
@@ -2171,7 +2093,7 @@ def winnow_fingerprints(
     # empty array emits is removed by the explicit isnotnull below
     # (a filter on the GENERATOR OUTPUT stays above the Generate)
     step = _spread(df).select(
-        F.col(id_col).alias("id"), _words_of(t).alias("__w")
+        F.col(id_col).alias("id"), words_col(F.lower(t)).alias("__w")
     )
     wq = F.col("__w")
     m = F.size(wq)
@@ -2187,12 +2109,7 @@ def winnow_fingerprints(
         .select("id", F.posexplode_outer("g").alias("pos", "gram"))
         .where(F.col("gram").isNotNull())
     )
-    if hash == "portable":
-        hx = hx.select("id", "pos", portable_token_hash(F.col("gram")).alias("h"))
-    elif hash == "xxhash64":
-        hx = hx.select("id", "pos", F.xxhash64("gram").alias("h"))
-    else:
-        raise ValueError(f"winnow_fingerprints: unknown hash {hash!r}")
+    hx = hx.select("id", "pos", _shingle_key(F.col("gram"), hash).alias("h"))
     frame = (
         Window.partitionBy("id")
         .orderBy("pos")
@@ -2494,10 +2411,7 @@ def bag_fingerprint_classes(
     """
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \\t\\n\\r]+"),
-        lambda x: x != "",
-    )
+    toks = words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     fp = F.md5(F.array_join(F.sort_array(toks), " "))
     keyed = df.select(fp.alias("bag_fp"), F.col(id_col).alias("__id")).repartition(
         F.col("bag_fp")

@@ -41,7 +41,7 @@ from soda_core_spark.functions.html import (
     HTML_ENTITIES,
     HTML_EXTRACT_RULES,
 )
-from soda_core_spark.functions.text import EN_STOPWORDS
+from soda_core_spark.functions.text import EN_STOPWORDS, words_col
 
 #: pre-clean rules (script/style/noscript/comment removal + newline
 #: fold) — the extraction chain's prefix, applied before block split.
@@ -108,7 +108,7 @@ def _context_free_class(
 ) -> Column:
     """The reference's classify_paragraphs CASE, char-based lengths."""
     length = F.length(text)
-    words = F.filter(F.split(text, "[ \t\n\r]+"), lambda w: w != "")
+    words = words_col(text)
     n_words = F.size(words)
     sw = F.size(F.filter(words, lambda w: F.lower(w).isin(EN_STOPWORDS)))
     sw_density = F.when(

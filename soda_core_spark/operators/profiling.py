@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from soda_core_spark.functions.text import words_col
+
 
 def key_skew_stats(
     df: DataFrame,
@@ -305,8 +307,6 @@ def top_vocabulary(
     """The corpus's ``k`` most frequent words (ties by word) — one
     explode + partial-agg groupBy + TakeOrdered; the collect is bounded
     by ``k`` regardless of corpus size."""
-    from soda_core_spark.functions.text import words_col
-
     w = F.explode(words_col(F.coalesce(F.col(text_col), F.lit(""))))
     rows = (
         docs.select(w.alias("w"))
@@ -334,8 +334,6 @@ def with_oov_rate(
     shuffle, zero Python — the language-ID hot-path pattern
     (functions/langid.py). 6 dp rounding pins the integer/integer
     division's cross-engine compare."""
-    from soda_core_spark.functions.text import words_col
-
     ws = words_col(F.coalesce(F.col(text_col), F.lit("")))
     staged = docs.withColumn("__ws", ws)
     n = F.size(F.col("__ws"))
@@ -479,11 +477,7 @@ def zipf_fit(
     from pyspark.sql import Window
 
     toks = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
+        words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     ).alias("tok")
     counts = df.select(toks).groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -684,11 +678,7 @@ def vocab_divergence(
     per unordered pair ``(group_a, group_b, n_tokens_a, n_tokens_b,
     jsd)``, ordered by the pair."""
     toks = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
+        words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     ).alias("tok")
     gt = (
         df.select(F.col(group_col).alias("g"), toks)
@@ -776,13 +766,7 @@ def vocabulary_novelty(
     from pyspark.sql import Window
 
     toks = F.explode(
-        F.filter(
-            F.split(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                "[ \\t\\n\\r]+",
-            ),
-            lambda w: w != "",
-        )
+        words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     ).alias("tok")
     dt = (
         df.select(F.col(day_col).cast("date").alias("day"), toks)
@@ -987,10 +971,7 @@ def vocab_stats(
     documents contain no tokens report zeros (ratio 0.0, not NULL).
     """
     words = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \\t\\n\\r]+"),
-            lambda x: x != "",
-        )
+        words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     ).alias("word")
     per_word = (
         df.select(F.col(group_col).alias("group"), words)
@@ -1377,11 +1358,7 @@ def burrows_delta(
     if top_k <= 0:
         raise ValueError(f"top_k must be > 0, got {top_k}")
     toks = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
+        words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     ).alias("tok")
     gt = (
         df.select(F.col(group_col).alias("g"), toks)
@@ -1483,8 +1460,6 @@ def heavy_hitter_tokens(
 
     import numpy as np
     import pandas as pd
-
-    from soda_core_spark.functions.text import words_col
 
     if not (0.0 < phi < 1.0):
         raise ValueError(f"phi must be in (0, 1), got {phi}")
@@ -1602,13 +1577,7 @@ def heaps_law_fit(
     toks = df.select(
         bucket.alias("__b"),
         F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
+            words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         ).alias("__tok"),
     )
     n_b = toks.groupBy("__b").agg(F.count(F.lit(1)).alias("__n"))
@@ -1696,13 +1665,7 @@ def vocabulary_coverage(
     toks = df.select(
         F.col(group_col).alias("group"),
         F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
+            words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         ).alias("word"),
     )
     per_word = toks.groupBy("group", "word").agg(
@@ -1987,7 +1950,6 @@ def distinct_ngram_diversity(
     metrics (duplicate_count) lifted from rows to n-gram events."""
     if not ns or any(n < 1 for n in ns):
         raise ValueError(f"ns must be non-empty positive orders, got {ns}")
-    from soda_core_spark.functions.text import words_col
 
     toks = words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     t = F.col("__toks")
@@ -3209,13 +3171,7 @@ def distinctive_tokens(
     toks = df.select(
         F.col(group_col).alias("group"),
         F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
+            words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         ).alias("token"),
     )
     grain = toks.groupBy("group", "token").agg(
@@ -3507,13 +3463,7 @@ def hapax_share_per_doc(
     toks = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
+            words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         ).alias("__tok"),
     )
     totals = toks.groupBy("doc_id").agg(
@@ -3890,11 +3840,7 @@ def _ws_tokens(text_col: str):
     """Shared whitespace tokenizer (the q135/q136 idiom): lowered,
     split on [ \\t\\n\\r]+, empties dropped — matches the oracle's
     ``list_filter(regexp_split_to_array(lower(...)), w -> w <> '')``."""
-    return F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                "[ \\t\\n\\r]+"),
-        lambda w: w != "",
-    )
+    return words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
 
 
 def pmi_collocations(
@@ -5550,9 +5496,7 @@ def capitalization_profile(
     projection + one grouped reduce; the token filter is a
     higher-order column function, never Python."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.filter(
-        F.split(t, "[ \\t\\n\\r]+"), lambda w: w != F.lit("")
-    )
+    toks = words_col(t)
     n_allcaps = F.size(
         F.filter(toks, lambda w: w.rlike("^[A-Z]{2,}$"))
     ).cast("long")

@@ -1,16 +1,17 @@
 """Dead-code guard: every top-level function and class in the package must
-be referenced somewhere in the repository's Python files outside its own
-definition. Registry queries (``@register``) and UDFs (``@*udf``) are
-reached by name lookup, so they are exempt."""
+be referenced from code somewhere in the repository's Python files outside
+its own definition. A reference is a name or attribute use, an import, or
+an identifier-shaped string constant (``getattr``/registry lookups); a
+mention in a comment or docstring does not keep a definition alive.
+Registry queries (``@register``) and UDFs (``@*udf``) are reached by name
+lookup, so they are exempt."""
 
 import ast
-import re
 from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "soda_core_spark"
-_IDENT = re.compile(r"\w+")
 
 
 def _repo_py_files():
@@ -18,6 +19,24 @@ def _repo_py_files():
         rel = p.relative_to(ROOT).parts
         if not any(part.startswith(".") or part == "spark-warehouse" for part in rel):
             yield p
+
+
+def _references(tree: ast.AST) -> Counter:
+    refs = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            refs[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            refs[node.name.rsplit(".", 1)[-1]] += 1
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value.isidentifier()
+        ):
+            refs[node.value] += 1
+    return refs
 
 
 def _exempt(node) -> bool:
@@ -30,18 +49,15 @@ def _exempt(node) -> bool:
 
 
 def test_every_package_definition_is_referenced():
-    sources = {p: p.read_text(encoding="utf-8") for p in _repo_py_files()}
-    counts = Counter(tok for src in sources.values() for tok in _IDENT.findall(src))
+    trees = {p: ast.parse(p.read_text(encoding="utf-8")) for p in _repo_py_files()}
+    counts = sum((_references(t) for t in trees.values()), Counter())
     dead = []
     for path in sorted(PACKAGE.rglob("*.py")):
-        lines = sources[path].splitlines()
-        for node in ast.parse(sources[path]).body:
+        for node in trees[path].body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 continue
             if _exempt(node):
                 continue
-            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            own = "\n".join(lines[start - 1 : node.end_lineno])
-            if counts[node.name] == _IDENT.findall(own).count(node.name):
+            if counts[node.name] == _references(node)[node.name]:
                 dead.append(f"{path.relative_to(ROOT)}:{node.lineno} {node.name}")
     assert not dead, "unreferenced package definitions:\n" + "\n".join(dead)

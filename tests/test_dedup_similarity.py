@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from soda_core_spark.operators import dedup as dd
 from soda_core_spark.operators.dedup import (
     duplicate_classes,
     exact_dedup,
@@ -968,8 +969,6 @@ def test_ngram_jaccard_hash_join_modes(spark, docs):
     Jaccard values identical to string keys on collision-free corpora
     (the shuffle-byte win only shows at real scale; measured neutral at
     sf0.1, value-identical)."""
-    import pytest as _pytest
-
     from soda_core_spark.operators.dedup import ngram_jaccard_all_pairs
 
     def pairs(mode):
@@ -984,8 +983,33 @@ def test_ngram_jaccard_hash_join_modes(spark, docs):
     assert exact  # the fixture has near-dup pairs
     assert pairs("xxhash64") == exact
     assert pairs("portable") == exact
-    with _pytest.raises(ValueError, match="hash_shingles"):
-        ngram_jaccard_all_pairs(docs, hash_shingles="md5")
+
+
+_SHINGLE_MODES = "hash mode must be None, 'xxhash64' or 'portable'"
+
+
+@pytest.mark.parametrize(
+    "call, message",
+    [
+        (
+            lambda d: dd.ngram_jaccard_all_pairs(d, max_doc_freq=None, hash_shingles="md5"),
+            _SHINGLE_MODES,
+        ),
+        (
+            lambda d: dd.ngram_containment_pairs(d, max_doc_freq=None, hash_shingles="md5"),
+            _SHINGLE_MODES,
+        ),
+        (lambda d: dd.decontaminate(d, d, hash_shingles="md5"), _SHINGLE_MODES),
+        (lambda d: dd.winnow_fingerprints(d, hash="md5"), "unknown hash 'md5'"),
+        (lambda d: dd.winnow_fingerprints(d, hash=None), "unknown hash None"),
+    ],
+    ids=["jaccard", "containment", "decontaminate", "winnow", "winnow-none"],
+)
+def test_hash_mode_validation(docs, call, message):
+    """Every operator with a shingle-hash mode rejects an unknown one with
+    a ValueError when the plan is built (no job runs)."""
+    with pytest.raises(ValueError, match=message):
+        call(docs)
 
 
 def test_png_truncated_checksum_rejected():
