@@ -18,11 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from soda_core_spark.functions.text import EN_STOPWORDS, words_col
-from soda_core_spark.operators.dedup import (
-    minhash_near_duplicates,
-    normalized_text,
-    simhash64,
-)
+from soda_core_spark.operators.dedup import minhash_near_duplicates, normalized_text
 from soda_core_spark.operators.similarity import brute_force_topk
 
 # registry: name -> (spark_fn(spark, sf_dir) -> DataFrame, oracle_sql | None)
@@ -897,18 +893,15 @@ def q38(spark, sf_dir):
     )
 
 
-def _q20_sql() -> str:
-    # The langid "model" is per-language function-word sets; score(lang) =
-    # |tokens ∩ set| / |tokens|, pred = argmax (first language in sorted
-    # order on ties — pandas idxmax semantics), conf = max, 'und' when no
-    # token hits any set. All exact integer counts and one IEEE double
-    # division per language, so the DuckDB twin is value-identical.
+def _langid_sql() -> tuple[str, str, str, str]:
+    """DuckDB twin of the JVM langid model, as the (counts, fracs, conf,
+    pred) SQL fragments over a ``toks`` list column: score(lang) =
+    |tokens ∩ set| / |tokens|, pred = argmax (first language in sorted
+    order on ties), conf = max, 'und' when no token hits any set. All
+    exact integer counts and one IEEE double division per language, so
+    the twin is value-identical."""
     from soda_core_spark.functions.langid import LANGS, LANG_WORDS
 
-    toks = (
-        "list_filter(regexp_split_to_array(lower(coalesce(text, '')),"
-        " '[ \\t\\n\\r]+'), x -> x <> '')"
-    )
     counts = ",\n           ".join(
         "len(list_filter(toks, x -> list_contains(["
         + ",".join(f"'{w}'" for w in sorted(LANG_WORDS[lang]))
@@ -923,6 +916,15 @@ def _q20_sql() -> str:
     pred = "CASE WHEN conf <= 0.0 THEN 'und' " + " ".join(
         f"WHEN f_{lang} = conf THEN '{lang}'" for lang in LANGS
     ) + " END"
+    return counts, fracs, conf, pred
+
+
+def _q20_sql() -> str:
+    toks = (
+        "list_filter(regexp_split_to_array(lower(coalesce(text, '')),"
+        " '[ \\t\\n\\r]+'), x -> x <> '')"
+    )
+    counts, fracs, conf, pred = _langid_sql()
     return f"""
     WITH w AS (
       SELECT doc_id, lang, {toks} AS toks FROM documents
@@ -948,19 +950,19 @@ def _q20_sql() -> str:
 
 @register("q20_langid_scores", _q20_sql())
 def q20(spark, sf_dir):
-    """Vectorized language-ID pandas UDF over documents + agreement with
-    the declared lang column. The model (function-word sets) is shared as
-    data with the DuckDB oracle, which re-derives scores/argmax in SQL —
-    exact integer counts, so the cross-engine compare is exact."""
-    from soda_core_spark.functions.langid import langid_udf
+    """Language ID over documents (the filter pipeline's JVM scorer) +
+    agreement with the declared lang column. The model (function-word
+    sets) is shared as data with the DuckDB oracle, which re-derives
+    scores/argmax in SQL — exact integer counts, so the cross-engine
+    compare is exact."""
+    from soda_core_spark.functions.langid import attach_langid_jvm
 
-    d = _t(spark, sf_dir, "documents")
-    out = d.withColumn("_lid", langid_udf(F.col("text")))
-    return out.select(
+    d = attach_langid_jvm(_t(spark, sf_dir, "documents"))
+    return d.select(
         "doc_id",
-        F.col("_lid.langid_pred").alias("langid_pred"),
-        F.round(F.col("_lid.langid_conf"), 6).alias("langid_conf"),
-        (F.col("_lid.langid_pred") == F.col("lang")).alias("agrees"),
+        "langid_pred",
+        F.round(F.col("langid_conf"), 6).alias("langid_conf"),
+        (F.col("langid_pred") == F.col("lang")).alias("agrees"),
     )
 
 
@@ -1030,30 +1032,18 @@ def q21(spark, sf_dir):
     )
 
 
-def _q22_sql() -> str:
-    # The perplexity model is a char-trigram LM with add-k smoothing
-    # trained on a frozen seed corpus. The oracle RE-TRAINS the same model
-    # in SQL from the same (shared-as-data) normalized seed string:
-    # lp(t3) = ln((tri_count + k) / (bi_count + k·V)), score = −mean(lp)
-    # over a document's trigrams, 20.0 sentinel for <3-char docs. Counts
-    # are exact integers; ln/avg agree with np.log/np.mean to ~1e-14 ≪
-    # the round(6) grain.
-    from soda_core_spark.functions.perplexity import (
-        _ALPHABET,
-        _K,
-        _normalize,
-        _SEED_CORPUS,
-    )
+def _trigram_lm_ctes() -> tuple[str, str]:
+    """DuckDB twin of the char-trigram LM: the ``seed/st/tri/bi`` CTEs
+    that RE-TRAIN the model in SQL from the same (shared-as-data)
+    normalized seed string, and the per-trigram log-prob expression
+    lp(t3) = ln((tri_count + k) / (bi_count + k·V)) over a row LEFT
+    JOINed to ``tri`` and ``bi``. Counts are exact integers; ln/avg agree
+    with np.log/np.mean to ~1e-14 ≪ the round(6) grain."""
+    from soda_core_spark.functions.perplexity import _ALPHABET, _K, _SEED_BODY
 
-    seed_body = " ".join(_normalize(_SEED_CORPUS).split())
-    assert "'" not in seed_body
+    assert "'" not in _SEED_BODY
     kv = _K * len(_ALPHABET)
-    norm = (
-        "trim(regexp_replace(regexp_replace(lower(coalesce(text, '')),"
-        " '[^a-z ]', ' ', 'g'), ' +', ' ', 'g'))"
-    )
-    return f"""
-    WITH seed(body) AS (SELECT '{seed_body}'),
+    ctes = f"""seed(body) AS (SELECT '{_SEED_BODY}'),
     st AS (
       SELECT unnest(list_transform(range(1, length(body) - 1),
                                    i -> substr(body, i, 3))) AS t
@@ -1061,7 +1051,20 @@ def _q22_sql() -> str:
     ),
     tri AS (SELECT t, count(*)::DOUBLE AS c FROM st GROUP BY t),
     bi AS (SELECT substr(t, 1, 2) AS b, count(*)::DOUBLE AS c
-           FROM st GROUP BY substr(t, 1, 2)),
+           FROM st GROUP BY substr(t, 1, 2))"""
+    return ctes, f"ln((coalesce(tri.c, 0) + {_K}) / (coalesce(bi.c, 0) + {kv}))"
+
+
+def _q22_sql() -> str:
+    # score = −mean(lp) over a document's trigrams, 20.0 sentinel for
+    # <3-char docs
+    lm, logp = _trigram_lm_ctes()
+    norm = (
+        "trim(regexp_replace(regexp_replace(lower(coalesce(text, '')),"
+        " '[^a-z ]', ' ', 'g'), ' +', ' ', 'g'))"
+    )
+    return f"""
+    WITH {lm},
     norm AS (SELECT doc_id, {norm} AS body FROM documents),
     dt AS (
       SELECT doc_id, unnest(list_transform(range(1, length(body) - 1),
@@ -1070,7 +1073,7 @@ def _q22_sql() -> str:
     ),
     scored AS (
       SELECT dt.doc_id,
-             ln((coalesce(tri.c, 0) + {_K}) / (coalesce(bi.c, 0) + {kv})) AS lp
+             {logp} AS lp
       FROM dt
       LEFT JOIN tri ON dt.t = tri.t
       LEFT JOIN bi ON substr(dt.t, 1, 2) = bi.b
@@ -1083,14 +1086,14 @@ def _q22_sql() -> str:
 
 @register("q22_perplexity", _q22_sql())
 def q22(spark, sf_dir):
-    """Char-trigram perplexity scoring (vectorized pandas UDF); the DuckDB
-    oracle re-trains the identical model from the shared seed corpus and
-    re-scores every document in SQL."""
-    from soda_core_spark.functions.perplexity import perplexity_udf
+    """Char-trigram perplexity scoring (the filter pipeline's scorer); the
+    DuckDB oracle re-trains the identical model from the shared seed
+    corpus and re-scores every document in SQL."""
+    from soda_core_spark.functions.perplexity import log_perplexity
 
     d = _t(spark, sf_dir, "documents")
     return d.select(
-        "doc_id", F.round(perplexity_udf(F.col("text")), 6).alias("log_ppl")
+        "doc_id", F.round(log_perplexity(F.col("text")), 6).alias("log_ppl")
     )
 
 
@@ -4818,15 +4821,7 @@ def q93(spark, sf_dir):
 
 
 def _q94_sql(threshold: float = 3.35) -> str:
-    from soda_core_spark.functions.perplexity import (
-        _ALPHABET,
-        _K,
-        _normalize,
-        _SEED_CORPUS,
-    )
-
-    seed_body = " ".join(_normalize(_SEED_CORPUS).split())
-    kv = _K * len(_ALPHABET)
+    lm, logp = _trigram_lm_ctes()
     deco = "coalesce(text, '') || '. wqjx vqzk xjwq. ok.'"
     pre = f"regexp_replace({deco}, '[\\t\\n\\r]+', ' ', 'g')"
     marked = (
@@ -4837,15 +4832,7 @@ def _q94_sql(threshold: float = 3.35) -> str:
         " '[^a-z ]', ' ', 'g'), ' +', ' ', 'g'))"
     )
     return f"""
-    WITH seed(body) AS (SELECT '{seed_body}'),
-    st AS (
-      SELECT unnest(list_transform(range(1, length(body) - 1),
-                                   i -> substr(body, i, 3))) AS t
-      FROM seed
-    ),
-    tri AS (SELECT t, count(*)::DOUBLE AS c FROM st GROUP BY t),
-    bi AS (SELECT substr(t, 1, 2) AS b, count(*)::DOUBLE AS c
-           FROM st GROUP BY substr(t, 1, 2)),
+    WITH {lm},
     sent0 AS (
       SELECT doc_id,
              unnest(list_transform(range(len(lst)),
@@ -4869,7 +4856,7 @@ def _q94_sql(threshold: float = 3.35) -> str:
     ),
     lp AS (
       SELECT dt.doc_id, dt.idx,
-             ln((coalesce(tri.c, 0) + {_K}) / (coalesce(bi.c, 0) + {kv}))
+             {logp}
                AS lp
       FROM dt
       LEFT JOIN tri ON dt.t = tri.t
@@ -5831,22 +5818,7 @@ def q108(spark, sf_dir):
 
 
 def _q109_sql() -> str:
-    from soda_core_spark.functions.langid import LANGS, LANG_WORDS
-
-    counts = ",\n           ".join(
-        "len(list_filter(toks, x -> list_contains(["
-        + ",".join(f"'{w}'" for w in sorted(LANG_WORDS[lang]))
-        + f"], x)))::BIGINT AS c_{lang}"
-        for lang in LANGS
-    )
-    fracs = ",\n           ".join(
-        f"CASE WHEN n > 0 THEN c_{lang}::DOUBLE / n ELSE 0.0 END AS f_{lang}"
-        for lang in LANGS
-    )
-    conf = "greatest(" + ", ".join(f"f_{lang}" for lang in LANGS) + ")"
-    pred = "CASE WHEN conf <= 0.0 THEN 'und' " + " ".join(
-        f"WHEN f_{lang} = conf THEN '{lang}'" for lang in LANGS
-    ) + " END"
+    counts, fracs, conf, pred = _langid_sql()
     return f"""
     WITH staged AS (
       SELECT doc_id,

@@ -1,27 +1,21 @@
-"""Language identification — a fastText-style classifier stand-in, run as a
-vectorized (Arrow-batched) pandas UDF. No per-row Python UDFs: scoring is
-pandas ``explode`` + ``isin`` + groupby over the whole Arrow batch
-(BASELINE.json "no per-row Python").
+"""Language identification — a fastText-style classifier stand-in, scored
+JVM-side with built-in higher-order functions (whole-stage codegen, no
+Python worker, no Arrow round-trip).
 
 The model: per-language stopword/function-word sets (public knowledge —
 standard high-frequency word lists). Score(lang) = fraction of lowercased
 tokens found in that language's set; prediction = argmax, confidence = the
 winning score. Deterministic, dependency-free, and shared (as *model data*,
-not inference code) with the plain-pandas oracle.
+not inference code) with the plain-Python and DuckDB oracles.
 
-Executor lifecycle mirrors the real-fastText pattern: the model table is a
-module-level constant loaded once per executor process at import, never
-per batch — swap ``LANG_WORDS``/``score_batch`` for a real
-``fasttext.load_model`` in production, the Spark plumbing is identical.
+The model table is a module-level constant; swap ``LANG_WORDS`` and the
+membership scoring for a real ``fasttext.load_model`` in production.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from soda_core_spark.functions.text import EN_STOPWORDS, words_col
 
@@ -61,58 +55,6 @@ LANG_WORDS: dict[str, frozenset[str]] = {
 }
 
 LANGS: tuple[str, ...] = tuple(sorted(LANG_WORDS))
-
-LANGID_SCHEMA = T.StructType(
-    [
-        T.StructField("langid_pred", T.StringType()),
-        T.StructField("langid_conf", T.DoubleType()),
-    ]
-)
-
-
-#: token → language bitmask (bit i = membership in LANGS[i]'s set) — turns
-#: per-language set probes into ONE dict map over the exploded tokens
-_TOKEN_MASK: dict[str, int] = {}
-for _i, _lang in enumerate(LANGS):
-    for _w in LANG_WORDS[_lang]:
-        _TOKEN_MASK[_w] = _TOKEN_MASK.get(_w, 0) | (1 << _i)
-
-
-def score_batch(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized batch scoring: one explode, one dict-map to language
-    bitmasks, one grouped sum over all languages at once. Counts are
-    exact integers — identical to per-language set membership.
-
-    Tokenization is the repo-wide contract (functions/text.py): split on
-    ASCII whitespace runs ``[ \\t\\n\\r]+``, drop empties — NOT
-    ``str.split()``, whose unicode-whitespace set (NBSP, \\x0c, …) would
-    silently diverge from the JVM path (:func:`attach_langid_jvm`) and
-    the DuckDB oracle on real HTML-derived text."""
-    import numpy as np
-
-    s = texts.fillna("")
-    tokens = s.str.lower().str.split(r"[ \t\n\r]+", regex=True)
-    exploded = tokens.explode()
-    valid = exploded.notna() & (exploded != "")
-    masks = exploded.map(_TOKEN_MASK).fillna(0).astype(np.int64)
-    per_lang = pd.DataFrame(
-        {lang: (masks.values >> i) & 1 for i, lang in enumerate(LANGS)},
-        index=exploded.index,
-    )
-    per_lang["__n"] = valid.astype(np.int64)
-    agg = per_lang.groupby(level=0).sum().reindex(s.index, fill_value=0)
-    n = agg.pop("__n")
-    frac = agg.div(n.where(n > 0, 1.0), axis=0)
-    pred = frac.idxmax(axis=1)
-    conf = frac.max(axis=1)
-    pred = pred.where(conf > 0.0, "und")  # no hits anywhere → undetermined
-    return pd.DataFrame({"langid_pred": pred, "langid_conf": conf.astype(float)})
-
-
-@pandas_udf(LANGID_SCHEMA)
-def langid_udf(texts: pd.Series) -> pd.DataFrame:
-    return score_batch(texts)
-
 
 def attach_langid_jvm(df, text_col: str = "text", lowered_tokens_col: str | None = None):
     """Attach ``langid_pred``/``langid_conf`` via the JVM model, staged so
@@ -164,8 +106,8 @@ def _lang_fraction(
 
 def _lang_argmax(fracs: dict[str, Column], conf: Column) -> Column:
     """Predicted language: the first of :data:`LANGS` whose fraction equals
-    ``conf`` (their max) — pandas ``idxmax`` order — or 'und' when no
-    language scores."""
+    ``conf`` (their max) — ties go to the earliest in sorted order — or
+    'und' when no language scores."""
     pred = F.when(conf <= 0.0, F.lit("und"))
     for lang in LANGS:
         pred = pred.when(fracs[lang] == conf, F.lit(lang))

@@ -1,13 +1,15 @@
-"""KenLM-style n-gram perplexity scoring as a vectorized pandas UDF.
+"""KenLM-style n-gram perplexity scoring.
 
 A real pipeline loads a KenLM binary per executor and scores Arrow batches;
-the model binary isn't available in this container, so the stand-in is a
-deterministic **character-trigram language model** trained at import time
-on a small embedded seed corpus (public-domain-style English sentences
-written for this repo). The Spark-side plumbing — iterator-form pandas UDF
-so the model is built once per executor python worker, Arrow batches, no
-per-row Python UDF — is exactly the production shape; only ``_MODEL`` would
-change.
+no model binary ships with this repo, so the stand-in is a deterministic
+**character-trigram language model** trained at import time on a small
+embedded seed corpus (public-domain-style English sentences written for
+this repo). The one Spark scorer is :func:`log_perplexity`: text
+normalization runs JVM-side (:func:`normalized_for_ppl`) and only the
+trigram-table gather crosses Arrow into a scalar pandas UDF, so the model
+table is loaded once per Python worker at import and never per row. The
+dict model (``_MODEL``, :func:`doc_log_perplexity`) is the plain-Python
+oracle.
 
 Perplexity = exp(mean over char trigrams of −log P(c3 | c1 c2)) with
 add-k smoothing. English-like text scores low (< ~25 on this model),
@@ -52,15 +54,19 @@ def _normalize(text: str) -> str:
     return "".join(c if c in _ALPHABET else " " for c in text.lower())
 
 
+#: the seed corpus normalized and whitespace-collapsed — the training text
+#: every form of the model (dict, dense table, DuckDB twin) counts over
+_SEED_BODY = " ".join(_normalize(_SEED_CORPUS).split())
+
+
 def _train() -> tuple[dict[str, dict[str, float]], float]:
     """Trigram conditional log-probs + a backoff log-prob for unseen
     contexts. Deterministic: pure counting over the frozen seed corpus."""
     tri: Counter[str] = Counter()
     bi: Counter[str] = Counter()
-    body = " ".join(_normalize(_SEED_CORPUS).split())
-    for i in range(len(body) - 2):
-        bi[body[i : i + 2]] += 1
-        tri[body[i : i + 3]] += 1
+    for i in range(len(_SEED_BODY) - 2):
+        bi[_SEED_BODY[i : i + 2]] += 1
+        tri[_SEED_BODY[i : i + 3]] += 1
     v = len(_ALPHABET)
     logp: dict[str, dict[str, float]] = {}
     for gram, c in tri.items():
@@ -73,9 +79,8 @@ def _train() -> tuple[dict[str, dict[str, float]], float]:
 def _train_unseen() -> dict[str, float]:
     """log P of an unseen next-char within a *seen* context."""
     bi: Counter[str] = Counter()
-    body = " ".join(_normalize(_SEED_CORPUS).split())
-    for i in range(len(body) - 2):
-        bi[body[i : i + 2]] += 1
+    for i in range(len(_SEED_BODY) - 2):
+        bi[_SEED_BODY[i : i + 2]] += 1
     v = len(_ALPHABET)
     return {ctx: math.log(_K / (c + _K * v)) for ctx, c in bi.items()}
 
@@ -97,11 +102,10 @@ _V = len(_ALPHABET)
 
 
 def _build_table() -> "np.ndarray":
-    body = " ".join(_normalize(_SEED_CORPUS).split())
     tri = np.zeros(_V * _V * _V, dtype=np.float64)
     bi = np.zeros(_V * _V, dtype=np.float64)
     lut = _char_lut()
-    ix = lut[np.frombuffer(body.encode("ascii"), dtype=np.uint8)]
+    ix = lut[np.frombuffer(_SEED_BODY.encode("ascii"), dtype=np.uint8)]
     if len(ix) >= 3:
         bi_idx = ix[:-1] * _V + ix[1:]
         np.add.at(bi, bi_idx[:-1], 1.0)
@@ -119,7 +123,6 @@ def _char_lut() -> "np.ndarray":
 
 _TABLE = _build_table()
 _CHAR_LUT = _char_lut()
-_NOT_ALPHA = r"[^a-z ]"
 
 
 def doc_log_perplexity(text: str) -> float:
@@ -141,37 +144,13 @@ def doc_log_perplexity(text: str) -> float:
     return total / n
 
 
-def score_batch(texts: pd.Series) -> pd.Series:
-    """Score an Arrow batch via the dense table: normalization is
-    vectorized pandas string ops over the whole batch; per document the
-    trigram walk is ONE numpy gather + mean (no Python loop over chars)."""
-    s = texts.fillna("").str.lower().str.replace(_NOT_ALPHA, " ", regex=True)
-    s = s.str.split().str.join(" ")
-    out = np.full(len(s), 20.0, dtype=np.float64)
-    table, lut, v2, v = _TABLE, _CHAR_LUT, _V * _V, _V
-    for i, body in enumerate(s.to_numpy(dtype=object)):
-        if len(body) < 3:
-            continue
-        ix = lut[np.frombuffer(body.encode("ascii"), dtype=np.uint8)]
-        out[i] = -table[ix[:-2] * v2 + ix[1:-1] * v + ix[2:]].mean()
-    return pd.Series(out, index=texts.index)
-
-
-@pandas_udf(T.DoubleType())
-def perplexity_udf(texts: pd.Series) -> pd.Series:
-    # plain scalar form (not iterator): the model is a module-level table
-    # loaded once per worker at import anyway, and scalar pandas UDFs of
-    # the same eval type FUSE into one ArrowEvalPython node with the other
-    # scorers — one Arrow round-trip for langid+ppl+scrub instead of three
-    return score_batch(texts)
-
-
 def normalized_for_ppl(text: Column) -> Column:
-    """JVM twin of the UDF's normalization: lowercase, non-[a-z ] → space,
-    collapse runs, trim — verified byte-identical to the pandas form over
-    the full 1.6M-doc corpus (0 mismatches). Whole-stage codegen, so the
-    ~70 % of UDF time the pandas string ops cost (measured 2.57 s of
-    3.64 s per 100 k docs single-thread) moves out of Python entirely."""
+    """JVM form of the model's normalization: lowercase, non-[a-z ] →
+    space, collapse runs, trim — verified byte-identical to the pandas
+    string-op form over the full 1.6M-doc corpus (0 mismatches).
+    Whole-stage codegen, so the ~70 % of scoring time those string ops
+    cost in Python (measured 2.57 s of 3.64 s per 100 k docs
+    single-thread) stays out of the Arrow UDF."""
     from pyspark.sql import functions as F
 
     t = F.coalesce(text, F.lit(""))
@@ -196,7 +175,18 @@ def gather_batch(normalized: pd.Series) -> pd.Series:
 
 @pandas_udf(T.DoubleType())
 def perplexity_prenorm_udf(normalized: pd.Series) -> pd.Series:
+    # plain scalar form (not iterator): the model is a module-level table
+    # loaded once per worker at import anyway, and scalar pandas UDFs of
+    # the same eval type FUSE into one ArrowEvalPython node with the other
+    # scorers — one Arrow round-trip for ppl+scrub instead of two
     return gather_batch(normalized)
+
+
+def log_perplexity(text: Column) -> Column:
+    """Document log-perplexity (mean −ln P per char trigram; 20.0 for
+    texts under 3 normalized chars): JVM normalization, then the table
+    gather in Python — the only Spark scorer for this model."""
+    return perplexity_prenorm_udf(normalized_for_ppl(text))
 
 
 # --- distributed training of the same model -------------------------------
@@ -297,27 +287,28 @@ def sentence_trim_udf(threshold: float):
     """Quality surgery at sentence granularity — trim the worst
     sentences instead of dropping the document (the salvage step modern
     pipelines run between scoring and discard): each sentence scores
-    with the SAME char-trigram LM as document perplexity
-    (:func:`doc_log_perplexity`, 6 dp-rounded), sentences above
+    with the SAME char-trigram table as document perplexity
+    (:func:`gather_batch`, 6 dp-rounded), sentences above
     ``threshold`` are cut (the <3-char sentinel 20.0 cuts fragments),
     survivors re-join with single spaces.
 
     Returns a pandas UDF producing
     ``struct<cleaned:string, n_sentences:int, n_kept:int>`` — cleaned is
     NULL when nothing survives. Row-local (zero shuffle); Arrow-batched;
-    numpy trigram gather per sentence."""
+    one numpy trigram gather per sentence over the whole batch."""
     thr = float(threshold)
 
     @pandas_udf("struct<cleaned:string, n_sentences:int, n_kept:int>")
     def f(texts: pd.Series) -> pd.DataFrame:
+        per_doc = [split_sentences(t) for t in texts]
+        bodies = pd.Series(
+            [" ".join(_normalize(s).split()) for sents in per_doc for s in sents],
+            dtype=object,
+        )
+        scores = iter(gather_batch(bodies).tolist())
         cleaned, n_s, n_k = [], [], []
-        for t in texts:
-            sents = split_sentences(t)
-            kept = [
-                s
-                for s in sents
-                if round(doc_log_perplexity(s), 6) <= thr
-            ]
+        for sents in per_doc:
+            kept = [s for s in sents if round(next(scores), 6) <= thr]
             cleaned.append(" ".join(kept) if kept else None)
             n_s.append(len(sents))
             n_k.append(len(kept))

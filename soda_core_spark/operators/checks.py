@@ -169,12 +169,22 @@ def _percent(numerator: Any, denominator: Any) -> Optional[float]:
     return 100.0 * float(numerator) / float(denominator)
 
 
+def _not_passed(check: CheckSpec) -> CheckOutcome:
+    return CheckOutcome.WARNED if check.level == "warn" else CheckOutcome.FAILED
+
+
 def _outcome(check: CheckSpec, value: Any) -> CheckOutcome:
     if value is None:
         return CheckOutcome.NOT_EVALUATED
     if check.threshold.passes(value):
         return CheckOutcome.PASSED
-    return CheckOutcome.WARNED if check.level == "warn" else CheckOutcome.FAILED
+    return _not_passed(check)
+
+
+def _schema_outcome(check: CheckSpec, problems: int) -> CheckOutcome:
+    """PASS iff every schema diff category is empty — the schema check's
+    rule (schema_check.py:237-246), not a numeric threshold."""
+    return CheckOutcome.PASSED if problems == 0 else _not_passed(check)
 
 
 def _identity(ctx: CheckContext, check: CheckSpec) -> str:
@@ -892,17 +902,8 @@ def plan_schema(check: CheckSpec, ctx: CheckContext) -> CheckPlan:
             check, ctx.contract.columns, ctx.df.schema.fields,
             ctx.primary_keys,
         )
-        res = _base_result(
-            ctx,
-            check,
-            problems,
-            diagnostics,
-        )
-        # PASS iff all diff categories empty (schema_check.py:237-246)
-        res.outcome = (
-            CheckOutcome.PASSED if problems == 0
-            else (CheckOutcome.WARNED if check.level == "warn" else CheckOutcome.FAILED)
-        )
+        res = _base_result(ctx, check, problems, diagnostics)
+        res.outcome = _schema_outcome(check, problems)
         return res
 
     return CheckPlan(check, evaluate=evaluate)

@@ -23,7 +23,7 @@ deletes, ``'unchanged'`` carries forward prior results.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

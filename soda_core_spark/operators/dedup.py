@@ -490,14 +490,14 @@ def simhash_df(
     This is the scale form: explode tokens → hash each token ONCE → one
     groupBy with ``bits`` conditional sums (full map-side partial
     aggregation, so the shuffle carries one row of ``bits`` ints per doc).
-    The expression form (:func:`simhash64`) re-evaluates the token
-    pipeline per bit (higher-order functions have no common-subexpression
-    elimination) — keep it for single-column attach only.
+    A per-row expression form would re-evaluate the token pipeline per
+    bit (higher-order functions have no common-subexpression
+    elimination), so this is the only SimHash.
 
     ``portable_hash=True`` uses the md5-derived 60-bit token hash so the
     fingerprint is reproducible in DuckDB (``bits`` is capped at
     PORTABLE_HASH_BITS). Token-less documents get simhash 0 (all votes
-    zero), same as :func:`simhash64`."""
+    zero)."""
     if portable_hash:
         bits = min(bits, PORTABLE_HASH_BITS)
         th = portable_token_hash
@@ -611,36 +611,6 @@ def hamming_near_duplicates(
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over word tokens, entirely with built-in functions:
-    per bit, majority vote of token-hash bits (+1/−1), sign → bit. The
-    per-bit fold is ``aggregate`` over the token-hash array — interpreted
-    but JVM-side AND re-evaluated per bit (no CSE in higher-order
-    functions); for anything beyond attaching one column, use
-    :func:`simhash_df` (explode→groupBy — each token hashed once)."""
-    words = words_col(F.lower(text))
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-
-    def _vote_fn(b: int):
-        # two-param closure, NOT a default-arg lambda (see _salted_hash)
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_cols = []
-    for bit in range(64):
-        vote = F.aggregate(hashes, F.lit(0), _vote_fn(bit))
-        bit_cols.append(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), bit)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
 
 
 # ---------------------------------------------------------------------------

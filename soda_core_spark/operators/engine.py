@@ -30,6 +30,8 @@ from soda_core_spark.operators.checks import (
     CHECK_PLANNERS,
     SIDE_QUERY_ERROR_PREFIX,
     SideQuery,
+    _base_result,
+    _identity,
 )
 from soda_core_spark.operators.compiler import apply_scan_filter
 from soda_core_spark.plans.model import CheckSpec, Contract
@@ -39,7 +41,6 @@ from soda_core_spark.plans.results import (
     CheckResult,
     ContractVerificationResult,
     Measurement,
-    check_identity,
 )
 
 
@@ -153,13 +154,7 @@ def _verify_contract_body(
     plans: list[tuple[CheckSpec, Optional[CheckPlan], Optional[str]]] = []
     seen_identities: set[str] = set()
     for check in checks:
-        ident = check_identity(
-            contract.dataset,
-            check.type,
-            check.column,
-            check.qualifier,
-            ",".join(check.columns) if check.columns else None,
-        )
+        ident = _identity(ctx, check)
         if ident in seen_identities:
             raise DuplicateCheckIdentityError(
                 f"duplicate check identity {ident} for {check.default_name()}; "
@@ -255,42 +250,18 @@ def _verify_contract_body(
     results: list[CheckResult] = []
     for check, plan, err in plans:
         if plan is None:
-            outcome = (
-                CheckOutcome.EXCLUDED if err == "excluded" else CheckOutcome.NOT_EVALUATED
-            )
-            results.append(
-                CheckResult(
-                    identity=check_identity(
-                        contract.dataset, check.type, check.column, check.qualifier,
-                        ",".join(check.columns) if check.columns else None,
-                    ),
-                    check_type=check.type,
-                    name=check.default_name(),
-                    column=check.column,
-                    outcome=outcome,
-                    threshold=check.threshold.describe(),
-                    level=check.level,
-                    message=None if err == "excluded" else err,
-                )
-            )
+            if err == "excluded":
+                res = _base_result(ctx, check, None, {})
+                res.outcome = CheckOutcome.EXCLUDED
+            else:
+                res = _base_result(ctx, check, None, {}, err)
+            results.append(res)
             continue
         try:
             results.append(plan.evaluate(values, ctx))
         except Exception as e:
             results.append(
-                CheckResult(
-                    identity=check_identity(
-                        contract.dataset, check.type, check.column, check.qualifier,
-                        ",".join(check.columns) if check.columns else None,
-                    ),
-                    check_type=check.type,
-                    name=check.default_name(),
-                    column=check.column,
-                    outcome=CheckOutcome.NOT_EVALUATED,
-                    threshold=check.threshold.describe(),
-                    level=check.level,
-                    message=f"evaluation failed: {e}",
-                )
+                _base_result(ctx, check, None, {}, f"evaluation failed: {e}")
             )
 
     return ContractVerificationResult(

@@ -3,8 +3,8 @@
 One full scan over the input does everything row-level:
 
     signals (built-in F.*, codegen)                 functions/text.py
-    + langid struct (one vectorized pandas UDF)     functions/langid.py
-    + log_ppl (one iterator pandas UDF)             functions/perplexity.py
+    + langid_pred/langid_conf (JVM, codegen)        functions/langid.py
+    + log_ppl (JVM normalize + scalar pandas UDF)   functions/perplexity.py
     + fail_<rule> flags (F.expr per rule)           operators/filter_rules.py
     + keep = AND(NOT fail_i)  (NULL-safe)           operators/compiler.py
     + text_scrubbed for KEPT rows (delta pandas     functions/scrub.py
@@ -44,10 +44,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from soda_core_spark.functions.langid import attach_langid_jvm
-from soda_core_spark.functions.perplexity import (
-    normalized_for_ppl,
-    perplexity_prenorm_udf,
-)
+from soda_core_spark.functions.perplexity import log_perplexity
 from soda_core_spark.functions.scrub import scrubbed
 from soda_core_spark.functions.text import with_signals
 from soda_core_spark.operators.compiler import keep_predicate
@@ -168,11 +165,10 @@ class QualityFilterPipeline:
         # once). JVM langid runs outside the Arrow node entirely.
         udf_cols = {}
         if self.perplexity:
-            # normalization runs JVM-side (codegen regexp chain, verified
-            # byte-identical to the pandas form); only the trigram-table
-            # gather crosses into Python — ~70 % of the UDF's CPU moves
-            # out of the Arrow node
-            udf_cols["log_ppl"] = perplexity_prenorm_udf(normalized_for_ppl(text))
+            # normalization runs JVM-side (codegen regexp chain); only the
+            # trigram-table gather crosses into Python — ~70 % of the
+            # scorer's CPU stays out of the Arrow node
+            udf_cols["log_ppl"] = log_perplexity(text)
         if self.scrub:
             # delta form: the UDF returns NULL for rows the scrub leaves
             # unchanged, so the Arrow batch back to the JVM carries only

@@ -22,7 +22,7 @@ page row stays in place. Parsing bodies is an Arrow-batched pandas UDF
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf

@@ -50,6 +50,12 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from soda_core_spark.operators.checks import (
+    _FRESHNESS_DIVISORS,
+    _outcome,
+    _schema_outcome,
+    schema_diff,
+)
 from soda_core_spark.plans.model import Contract
 from soda_core_spark.plans.results import (
     CheckOutcome,
@@ -234,23 +240,12 @@ def verify_contract_metadata_only(
                     "scan (mergeSchema decides)"
                 )
             else:
-                from soda_core_spark.operators.checks import schema_diff
-
                 problems, sdiag = schema_diff(
                     check, contract.columns, footer_fields, None
                 )
                 value = float(problems)
                 diagnostics.update(sdiag)
-                # PASS iff every diff category is empty — the scan
-                # path's rule, not a numeric threshold
-                forced_outcome = (
-                    CheckOutcome.PASSED if problems == 0
-                    else (
-                        CheckOutcome.WARNED
-                        if check.level == "warn"
-                        else CheckOutcome.FAILED
-                    )
-                )
+                forced_outcome = _schema_outcome(check, problems)
         elif check.type == "freshness" and _plain_freshness(check):
             b = bounds.get(check.column)
             if b is None:
@@ -276,10 +271,6 @@ def verify_contract_metadata_only(
                     )
                     diagnostics["maxTimestamp"] = max_ts.isoformat()
                 else:
-                    from soda_core_spark.operators.checks import (
-                        _FRESHNESS_DIVISORS,
-                    )
-
                     delta_s = (now - max_ts).total_seconds()
                     value = float(
                         math.floor(delta_s / _FRESHNESS_DIVISORS[check.unit])
@@ -328,25 +319,17 @@ def verify_contract_metadata_only(
                     )
         else:
             message = "requires a data scan (run verify_contract)"
-        if forced_outcome is not None:
-            outcome = forced_outcome
-        elif value is None:
-            outcome = CheckOutcome.NOT_EVALUATED
-        elif check.threshold.passes(value):
-            outcome = CheckOutcome.PASSED
-        else:
-            outcome = (
-                CheckOutcome.WARNED
-                if check.level == "warn"
-                else CheckOutcome.FAILED
-            )
         results.append(
             CheckResult(
                 identity=ident,
                 check_type=check.type,
                 name=check.default_name(),
                 column=check.column,
-                outcome=outcome,
+                outcome=(
+                    _outcome(check, value)
+                    if forced_outcome is None
+                    else forced_outcome
+                ),
                 metric_value=value,
                 threshold=check.threshold.describe(),
                 level=check.level,

@@ -52,7 +52,7 @@ def _langid(text: str) -> tuple[str, float]:
     if not tokens:
         return "und", 0.0
     best_lang, best = None, -1.0
-    for lang in LANGS:  # sorted order == pandas idxmax column order
+    for lang in LANGS:  # sorted order: the first maximum wins ties
         score = sum(1 for t in tokens if t in LANG_WORDS[lang]) / len(tokens)
         if score > best:
             best_lang, best = lang, score

@@ -1,10 +1,11 @@
 """Dead-code guard: every top-level function and class in the package must
 be referenced from code somewhere in the repository's Python files outside
-its own definition. A reference is a name or attribute use, an import, or
-an identifier-shaped string constant (``getattr``/registry lookups); a
-mention in a comment or docstring does not keep a definition alive.
-Registry queries (``@register``) and UDFs (``@*udf``) are reached by name
-lookup, so they are exempt."""
+its own definition. A reference is a name or attribute use, an
+identifier-shaped string constant (``getattr``/registry lookups), or an
+import that the importing module uses or that the package ``__init__``
+re-exports; an unused import, a comment or a docstring mention does not
+keep a definition alive. Registry queries (``@register``) and UDFs
+(``@*udf``) are reached by name lookup, so they are exempt."""
 
 import ast
 from collections import Counter
@@ -12,6 +13,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "soda_core_spark"
+REEXPORTS = PACKAGE / "__init__.py"
 
 
 def _repo_py_files():
@@ -21,21 +23,27 @@ def _repo_py_files():
             yield p
 
 
-def _references(tree: ast.AST) -> Counter:
+def _references(tree: ast.AST, reexports: bool = False) -> Counter:
     refs = Counter()
+    aliases = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             refs[node.id] += 1
         elif isinstance(node, ast.Attribute):
             refs[node.attr] += 1
         elif isinstance(node, ast.alias):
-            refs[node.name.rsplit(".", 1)[-1]] += 1
+            aliases.append(node)
         elif (
             isinstance(node, ast.Constant)
             and isinstance(node.value, str)
             and node.value.isidentifier()
         ):
             refs[node.value] += 1
+    used = set(refs)
+    for a in aliases:
+        bound = a.asname or a.name.split(".", 1)[0]
+        if reexports or bound in used:
+            refs[a.name.rsplit(".", 1)[-1]] += 1
     return refs
 
 
@@ -50,7 +58,10 @@ def _exempt(node) -> bool:
 
 def test_every_package_definition_is_referenced():
     trees = {p: ast.parse(p.read_text(encoding="utf-8")) for p in _repo_py_files()}
-    counts = sum((_references(t) for t in trees.values()), Counter())
+    counts = sum(
+        (_references(t, reexports=p == REEXPORTS) for p, t in trees.items()),
+        Counter(),
+    )
     dead = []
     for path in sorted(PACKAGE.rglob("*.py")):
         for node in trees[path].body:

@@ -1,6 +1,6 @@
-"""Pure-Python unit tests (no Spark): thresholds, parsing, identities,
-scrub/langid/perplexity model semantics — mirrors the reference's unit
-layer (SURVEY §5.1)."""
+"""Unit tests: thresholds, parsing, identities, scrub/langid/perplexity
+model semantics — mirrors the reference's unit layer (SURVEY §5.1). Pure
+Python except langid, whose only scorer is a Spark expression."""
 
 import pytest
 
@@ -131,34 +131,38 @@ class TestScrub:
         assert out == "<SSN>"
 
 
+def _langid_rows(spark, texts):
+    from pyspark.sql import functions as F
+
+    from soda_core_spark.functions.langid import langid_jvm_from_words
+    from soda_core_spark.functions.text import words_col
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    cols = langid_jvm_from_words(words_col(F.lower(F.col("text"))))
+    rows = df.select("i", *[c.alias(k) for k, c in cols.items()]).orderBy("i")
+    return [(r["langid_pred"], r["langid_conf"]) for r in rows.collect()]
+
+
 class TestLangid:
-    def test_score_batch(self):
-        import pandas as pd
-
-        from soda_core_spark.functions.langid import score_batch
-
-        res = score_batch(
-            pd.Series(
-                [
-                    "the cat and the dog are in the house with all of them",
-                    "der hund und die katze sind mit dem kind im haus",
-                    "xyzzy qwerty",
-                    "",
-                ]
-            )
+    def test_score_batch(self, spark):
+        res = _langid_rows(
+            spark,
+            [
+                "the cat and the dog are in the house with all of them",
+                "der hund und die katze sind mit dem kind im haus",
+                "xyzzy qwerty",
+                "",
+            ],
         )
-        assert list(res["langid_pred"]) == ["en", "de", "und", "und"]
-        assert res["langid_conf"].iloc[0] > 0.4
+        assert [p for p, _ in res] == ["en", "de", "und", "und"]
+        assert res[0][1] > 0.4
 
-    def test_tie_break_matches_sorted_lang_order(self):
-        import pandas as pd
-
-        from soda_core_spark.functions.langid import LANGS, score_batch
+    def test_tie_break_matches_sorted_lang_order(self, spark):
+        from soda_core_spark.functions.langid import LANGS
 
         assert LANGS == tuple(sorted(LANGS))
         # a token in no set → und with conf 0
-        res = score_batch(pd.Series(["zzzz"]))
-        assert res["langid_pred"].iloc[0] == "und"
+        assert _langid_rows(spark, ["zzzz"]) == [("und", 0.0)]
 
 
 class TestPerplexity:
@@ -179,19 +183,28 @@ class TestPerplexity:
         assert doc_log_perplexity("!!!###") == 20.0  # normalizes to empty
 
     def test_table_matches_dict_model(self):
+        """The dense-table gather (the Spark scorer's Python half, also
+        what sentence_trim_udf scores sentences with) equals the dict
+        model on normalized text, including the <3-char sentinel."""
         import numpy as np
+        import pandas as pd
 
         from soda_core_spark.functions.perplexity import (
+            _normalize,
             doc_log_perplexity,
-            score_batch,
+            gather_batch,
         )
-        import pandas as pd
 
         texts = [
             "the quick brown fox jumps over the lazy dog",
             "completely different words about query engines",
             "a",
+            "ab",
+            "abc",
+            "It was the best of times.",
         ]
-        vec = score_batch(pd.Series(texts)).to_numpy()
+        normalized = pd.Series([" ".join(_normalize(t).split()) for t in texts])
+        vec = gather_batch(normalized).to_numpy()
         ref = np.array([doc_log_perplexity(t) for t in texts])
         assert np.allclose(vec, ref, atol=1e-9)
+        assert list(vec[2:4]) == [20.0, 20.0] and vec[4] != 20.0
